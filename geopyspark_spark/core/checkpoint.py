@@ -25,6 +25,7 @@ var is read per call, so long-lived sessions can flip it between jobs.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -56,3 +57,18 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
                 "<durable path>) first")
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+@contextmanager
+def pinned_batch(df: DataFrame):
+    """Pin a ``foreachBatch`` micro-batch for the length of a sink and
+    release it on exit. Each partition is scanned once, by the first
+    action that needs it, and every later action reads the cache. A
+    cache rather than a checkpoint: the pin must be released before
+    the sink returns, and a lost cached block recomputes from the
+    replayable stream source, so reliable mode needs no checkpoint."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()

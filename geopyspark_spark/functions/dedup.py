@@ -760,12 +760,31 @@ def compact_signatures(spark, sigs_path: str,
     return len(_glob.glob(os.path.join(base, "*.parquet")))
 
 
+def check_corpus_sigs(corpus_sigs: DataFrame, num_hashes: int = 16,
+                      bands: int = 4, n: int = 2) -> None:
+    """Fail fast on a parameter mismatch: signatures built with a
+    different (num_hashes, bands, n) would join on incomparable band
+    keys / gram orders and silently return no duplicates. One one-row
+    job against the artifact — column-pruned to the three int params,
+    so the scan is a few row-group footers. The defaults are
+    :func:`dedup_against_corpus`'s."""
+    got = corpus_sigs.select("num_hashes", "bands", "gram_n").first()
+    if got is not None and (got["num_hashes"], got["bands"],
+                            got["gram_n"]) != (num_hashes, bands, n):
+        raise ValueError(
+            f"corpus_sigs was built with num_hashes="
+            f"{got['num_hashes']}, bands={got['bands']}, "
+            f"n={got['gram_n']} but this call uses num_hashes="
+            f"{num_hashes}, bands={bands}, n={n}")
+
+
 def dedup_against_corpus(batch: DataFrame, corpus: DataFrame | None = None,
                          num_hashes: int = 16, bands: int = 4,
                          n: int = 2, min_jaccard: float = 0.5,
                          text_col: str = "text",
                          max_bucket_size: int | None = 10_000,
-                         corpus_sigs: DataFrame | None = None) -> DataFrame:
+                         corpus_sigs: DataFrame | None = None,
+                         check_sigs: bool = True) -> DataFrame:
     """INCREMENTAL near-dup: flag every batch document that
     near-duplicates (n-gram Jaccard >= ``min_jaccard``) any corpus
     document — the daily-ingest shape of production dedup, where the
@@ -785,7 +804,9 @@ def dedup_against_corpus(batch: DataFrame, corpus: DataFrame | None = None,
     :func:`corpus_signatures` persists, so the two paths return
     identical rows). Exactly one of ``corpus`` / ``corpus_sigs`` must
     be given; a ``corpus_sigs`` built with different
-    (num_hashes, bands, n) raises instead of silently missing dups.
+    (num_hashes, bands, n) raises instead of silently missing dups
+    (:func:`check_corpus_sigs`; ``check_sigs=False`` skips that one-row
+    job for callers that already ran it, e.g. a stream per micro-batch).
     Candidates come from a batch x corpus band-bucket equi-join (never
     all-pairs), hot buckets on either side are dropped before the join
     (same skew rationale as :func:`lsh_candidate_pairs`), and the
@@ -806,19 +827,8 @@ def dedup_against_corpus(batch: DataFrame, corpus: DataFrame | None = None,
             "corpus_sigs= (a corpus_signatures artifact)")
     b_sig = _band_signatures(batch, num_hashes, bands, text_col)
     if corpus_sigs is not None:
-        # fail fast on a parameter mismatch: signatures built with a
-        # different (num_hashes, bands, n) would join on incomparable
-        # band keys / gram orders and silently return no duplicates.
-        # (One one-row job against the artifact — column-pruned to the
-        # three int params, so the scan is a few row-group footers.)
-        got = corpus_sigs.select("num_hashes", "bands", "gram_n").first()
-        if got is not None and (got["num_hashes"], got["bands"],
-                                got["gram_n"]) != (num_hashes, bands, n):
-            raise ValueError(
-                f"corpus_sigs was built with num_hashes="
-                f"{got['num_hashes']}, bands={got['bands']}, "
-                f"n={got['gram_n']} but this call uses num_hashes="
-                f"{num_hashes}, bands={bands}, n={n}")
+        if check_sigs:
+            check_corpus_sigs(corpus_sigs, num_hashes, bands, n)
         c_sig = (corpus_sigs
                  .select("doc_id", F.explode("band_keys").alias("bk"))
                  .select("doc_id", F.col("bk.band").alias("band"),

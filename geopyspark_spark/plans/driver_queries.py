@@ -691,8 +691,12 @@ def q_raster_pyramid_time_travel(spark, sf_dir):
 
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        # the reads run under the caller's job group (see write_pyramid)
+        read_snapshot = inheritable_thread_target(spark)(_read_snapshot)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            rows = [r for part in pool.map(_read_snapshot, ("p1", "p2"))
+            rows = [r for part in pool.map(read_snapshot, ("p1", "p2"))
                     for r in part]
     finally:
         shutil.rmtree(uri, ignore_errors=True)

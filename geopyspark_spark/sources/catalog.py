@@ -17,8 +17,12 @@ Spark-native design:
 - ``query`` turns a geometry into key ranges driver-side (KeyTransform)
   and emits plain column predicates, so `.explain` shows PushedFilters
   reaching the scan;
-- ``read_value`` is the no-cluster random access path: DuckDB point read
-  over the same parquet (row-group pruned by the sort order).
+- ``read_value``, :class:`ValueReader` and the TMS tile fetcher share
+  ONE no-cluster point-read path (``_point_read``): the manifest prunes
+  the version's files to those whose zindex range covers the key, and
+  DuckDB reads them (row-group pruned by the sort order) on a cursor of
+  the process's one shared in-memory database — no database is opened
+  per read.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ import json
 import math
 import os
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -814,8 +819,8 @@ def _envelope_key_bounds(kt, geom) -> tuple[int, int, int, int] | None:
 
 def _query_data_files(uri: str, layer_name: str, zoom: int, version,
                       keys: set | None) -> list[str]:
-    """Data files for a query scan, FILE-pruned by the manifest when
-    the exact-key path resolved the AOI's keys (r16): a file whose
+    """Data files for a query scan or a point read, FILE-pruned by the
+    manifest when the exact keys are known (r16): a file whose
     recorded zindex range covers no requested key's index provably
     holds none of its rows (footer stats cover every stored row), so
     it is dropped before the reader ever lists it — and before the
@@ -824,7 +829,13 @@ def _query_data_files(uri: str, layer_name: str, zoom: int, version,
     temporal curves (a spatial key does not determine its z3 index),
     and missing stats."""
     if keys:
-        mf = file_manifest(uri, layer_name, zoom, version=version)
+        # resolve the version ONCE: the manifest read and the entry
+        # paths then name the same version even when a commit lands
+        # between them
+        if version is None:
+            version = current_version(uri, layer_name, zoom)
+        mf = (file_manifest(uri, layer_name, zoom, version=version)
+              if version is not None else None)
         strat = ((mf or {}).get("index") or {}).get("strategy")
         entries = (mf or {}).get("files") or []
         if (strat in ("zorder", "hilbert", "rowmajor") and entries
@@ -847,15 +858,11 @@ def _query_data_files(uri: str, layer_name: str, zoom: int, version,
                 j = bisect.bisect_left(zs, e["zmin"])
                 return j < len(zs) and zs[j] <= e["zmax"]
 
-            vname = version
-            if vname is None:
-                vname = current_version(uri, layer_name, zoom)
-            if vname is not None:
-                # keep at least one file so the reader can resolve the
-                # schema; the key predicates filter it to zero rows
-                kept = [e for e in entries if hits(e)] or entries[:1]
-                return _entry_paths(uri, layer_name, zoom,
-                                    _norm_version(vname), kept)
+            # keep at least one file so the reader can resolve the
+            # schema; the key predicates filter it to zero rows
+            kept = [e for e in entries if hits(e)] or entries[:1]
+            return _entry_paths(uri, layer_name, zoom,
+                                _norm_version(version), kept)
     return data_files(uri, layer_name, zoom, version=version)
 
 
@@ -986,25 +993,60 @@ def query(spark: SparkSession, uri: str, layer_name: str, zoom: int,
     return TiledRasterLayer(df, md)
 
 
-def read_value(uri: str, layer_name: str, zoom: int, col: int, row: int,
-               instant=None, band: int | None = None,
-               version: str | int | None = None):
-    """Single-tile random access WITHOUT Spark (reference ValueReader):
-    DuckDB point read over the sorted parquet — row-group pruning on the
-    key columns makes this an O(row-group) read, not a scan."""
-    import duckdb
+#: The process's shared in-memory DuckDB database for point reads:
+#: ``(pid, connection, idle cursors)``, opened on first use and reopened
+#: in a forked child (a DuckDB handle must not cross a fork).
+_DUCKDB: tuple | None = None
+_DUCKDB_LOCK = threading.Lock()
 
-    files = data_files(uri, layer_name, zoom, version=version)
+
+def _shared_duckdb() -> tuple:
+    """``(connection, idle cursors)`` of the process's shared database."""
+    global _DUCKDB
+    db = _DUCKDB
+    if db is None or db[0] != os.getpid():
+        with _DUCKDB_LOCK:
+            db = _DUCKDB
+            if db is None or db[0] != os.getpid():
+                import duckdb
+
+                con = duckdb.connect()
+                # a point read scans one file's few row groups, so
+                # DuckDB's worker threads only add hand-off cost (a
+                # 64x64-cell tile fetch: 3.0-3.7 ms with 1 thread,
+                # 3.4-4.1 ms with 4, on a 4-core VM)
+                con.execute("SET threads=1")
+                db = _DUCKDB = (os.getpid(), con, [])
+    return db[1], db[2]
+
+
+def _point_read(uri: str, layer_name: str, zoom: int, col: int, row: int,
+                instant=None, band: int | None = None,
+                version: str | int | None = None, cells_only: bool = False):
+    """THE catalog point read, shared by :func:`read_value`,
+    :class:`ValueReader` and the TMS tile fetcher: the rows of tile
+    ``(col, row)`` as a pyarrow Table (possibly empty), or None when
+    the version holds no data files.
+
+    Only the files whose manifest zindex range covers the key are
+    read (``_query_data_files``); DuckDB prunes row groups inside them.
+    The query runs on a cursor of the process's one shared in-memory
+    database. A read borrows an idle cursor (or opens one) and returns
+    it when done, so concurrent reads (``ThreadingHTTPServer`` runs one
+    thread per request) each hold their own cursor, and the number of
+    cursors stays at the peak concurrency: DuckDB's parent connection
+    keeps a few hundred bytes per cursor ever opened, so a cursor per
+    read would grow a long-running server without bound.
+
+    ``cells_only`` selects just the ``cells`` column. Predicates bind
+    as PARAMETERS and path literals double their quotes (an apostrophe
+    in a path, e.g. "o'hare-dem", stays data)."""
+    files = _query_data_files(uri, layer_name, zoom, version,
+                              {(int(col), int(row))})
     if not files:
-        return []
-    con = duckdb.connect()
-    # predicates bind as PARAMETERS and the path literals double their
-    # quotes (r15 review: f-string interpolation executed whatever an
-    # instant/uri string carried, and an apostrophe in a path — e.g.
-    # "o'hare-dem" — broke the FROM clause). The file LIST (not a dir
-    # glob) is the r16 manifest resolution: incremental commits share
-    # untouched files with parent version dirs.
-    q = (f"SELECT * FROM read_parquet([{_duckdb_file_list(files)}]) "
+        return None
+    cols = "cells" if cells_only else "*"
+    q = (f"SELECT {cols} FROM read_parquet([{_duckdb_file_list(files)}]) "
          "WHERE key_col = ? AND key_row = ?")
     params: list = [int(col), int(row)]
     if instant is not None:
@@ -1013,9 +1055,29 @@ def read_value(uri: str, layer_name: str, zoom: int, col: int, row: int,
     if band is not None:
         q += " AND band = ?"
         params.append(int(band))
-    rel = con.execute(q, params)
-    cols = [d[0] for d in rel.description]
-    return [dict(zip(cols, r)) for r in rel.fetchall()]
+    con, idle = _shared_duckdb()
+    try:
+        cur = idle.pop()
+    except IndexError:
+        cur = con.cursor()
+    try:
+        return cur.execute(q, params).fetch_arrow_table()
+    finally:
+        idle.append(cur)
+
+
+def read_value(uri: str, layer_name: str, zoom: int, col: int, row: int,
+               instant=None, band: int | None = None,
+               version: str | int | None = None):
+    """Single-tile random access WITHOUT Spark (reference ValueReader):
+    the tile's records as named dicts (``[]`` when absent). Runs the
+    shared point read (``_point_read``): only the manifest files whose
+    zindex range covers the key are opened, DuckDB prunes their row
+    groups, and the query runs on a cursor of the process's one shared
+    DuckDB database — no database is opened per call."""
+    tbl = _point_read(uri, layer_name, zoom, col, row, instant=instant,
+                      band=band, version=version)
+    return [] if tbl is None else tbl.to_pylist()
 
 
 def _duckdb_file_list(files: list[str]) -> str:
@@ -1182,9 +1244,16 @@ def write_pyramid(uri: str, layer_name: str, pyramid,
         # the partial-publish window stays as narrow as the sequential
         # loop's (zooms already in flight still finish; their commits
         # are superseded-safe like any concurrent write).
+        from pyspark import inheritable_thread_target
+
+        # pool threads run the zoom commits under the caller's job
+        # group and description (pinned-thread mode gives every thread
+        # its own local properties), so their jobs stay attributable
+        spark = levels[0][1].df.sparkSession
+        write_zoom = inheritable_thread_target(spark)(_write_zoom)
         pool = ThreadPoolExecutor(max_workers=min(4, len(levels)))
         try:
-            futs = [pool.submit(_write_zoom, zl) for zl in levels]
+            futs = [pool.submit(write_zoom, zl) for zl in levels]
             try:
                 results = [f.result() for f in futs]
             except BaseException:
@@ -1536,15 +1605,13 @@ def compact(spark: SparkSession, uri: str, layer_name: str, zoom: int,
 
 class ValueReader:
     """Catalog single-value reader with no Spark overhead (reference
-    ``catalog.py:74-130``) — suitable for TMS serving. Keeps one DuckDB
-    connection open so repeated point reads skip connection setup; each
-    read is a row-group-pruned lookup on the z-ordered parquet."""
+    ``catalog.py:74-130``) — suitable for TMS serving. A thin handle
+    over :func:`read_value`: every read runs the shared point read on
+    a cursor of the process's one DuckDB database (no per-reader
+    connection), opening only the manifest files that cover the key."""
 
     def __init__(self, uri: str, layer_name: str, zoom: int | None = None):
-        import duckdb
-
         self.uri, self.layer_name, self.zoom = uri, layer_name, zoom
-        self._con = duckdb.connect()
 
     def read(self, col: int, row: int, zdt=None, zoom: int | None = None):
         """One tile's records (named dicts), or ``None`` if absent.
@@ -1554,19 +1621,8 @@ class ValueReader:
         ``except`` used to turn wrong uris, malformed SQL, and missing
         manifests into blank tiles with zero diagnostics)."""
         z = zoom if zoom is not None else (self.zoom or 0)
-        files = data_files(self.uri, self.layer_name, z)
-        if not files:
-            return None  # zoom dir exists but holds no parquet yet
-        q = (f"SELECT * FROM read_parquet([{_duckdb_file_list(files)}]) "
-             "WHERE key_col = ? AND key_row = ?")
-        params: list = [int(col), int(row)]
-        if zdt is not None:
-            q += " AND instant = CAST(? AS TIMESTAMP)"
-            params.append(str(zdt))
-        rel = self._con.execute(q, params)
-        cols = [d[0] for d in rel.description]
-        rows = [dict(zip(cols, r)) for r in rel.fetchall()]
-        return rows or None
+        return read_value(self.uri, self.layer_name, z, col, row,
+                          instant=zdt) or None
 
 
 class AttributeStore:

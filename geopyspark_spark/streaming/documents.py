@@ -67,18 +67,28 @@ def stream_dedup_against_corpus(docs_stream: DataFrame,
     pattern) — a replay rewrites its partition instead of appending
     duplicate verdict rows, making the sink effectively exactly-once
     per (batch_id, doc)."""
-    from ..functions.dedup import dedup_against_corpus
+    from ..core.checkpoint import pinned_batch
+    from ..functions.dedup import check_corpus_sigs, dedup_against_corpus
+
+    # the artifact is static: validate its (num_hashes, bands, n) once,
+    # before start(), not with a one-row job per micro-batch
+    check_corpus_sigs(corpus_sigs, **{
+        k: v for k, v in dedup_kwargs.items()
+        if k in ("num_hashes", "bands", "n")})
 
     def judge(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        out = dedup_against_corpus(batch_df, corpus_sigs=corpus_sigs,
-                                   **dedup_kwargs)
-        (out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path))
+        # one scan of the micro-batch: the operator's four reads of the
+        # batch (band signatures, grams, gram counts, doc ids) hit the pin
+        with pinned_batch(batch_df) as batch_df:
+            if batch_df.isEmpty():
+                return
+            out = dedup_against_corpus(batch_df, corpus_sigs=corpus_sigs,
+                                       check_sigs=False, **dedup_kwargs)
+            (out.withColumn("batch_id", F.lit(int(batch_id)))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(out_path))
 
     ckpt = checkpoint or tempfile.mkdtemp(prefix="dedup_stream_ckpt_")
     return (docs_stream.writeStream

@@ -68,21 +68,26 @@ def stream_into_catalog(stream_df: DataFrame, uri: str, layer_name: str,
     boto-style s3 path — the old uri-based default failed at start()).
     Pass a durable, Hadoop-accessible location (s3a:// with the S3A
     jars, HDFS, NFS) when restart recovery across hosts matters."""
+    from ..core.checkpoint import pinned_batch
     from ..layer import TiledRasterLayer
     from ..sources import catalog as cat
 
     def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        layer = TiledRasterLayer(batch_df, metadata)
-        # committed-layer check, not a bare isdir: a crashed first write
-        # leaves staging dirs but no manifest, and must NOT route the
-        # retry through update_layer (which would read garbage)
-        existing = cat.layer_exists(uri, layer_name, zoom)
-        if not existing:
-            cat.write(uri, layer_name, layer, zoom=zoom)
-        else:
-            cat.update_layer(batch_df.sparkSession, uri, layer_name, zoom, layer)
+        # one scan of the micro-batch: the commit's own passes (range
+        # sampling, key collection, write) read the pinned rows
+        with pinned_batch(batch_df) as batch_df:
+            if batch_df.isEmpty():
+                return
+            layer = TiledRasterLayer(batch_df, metadata)
+            # committed-layer check, not a bare isdir: a crashed first
+            # write leaves staging dirs but no manifest, and must NOT
+            # route the retry through update_layer (which would read
+            # garbage)
+            if not cat.layer_exists(uri, layer_name, zoom):
+                cat.write(uri, layer_name, layer, zoom=zoom)
+            else:
+                cat.update_layer(batch_df.sparkSession, uri, layer_name,
+                                 zoom, layer)
 
     if checkpoint is None:
         if cat._is_object(uri):

@@ -7,11 +7,14 @@ reads off the hot path, over-zoom by crop+resample at ``TileReader.scala:
 28-44``, rendering via ColorMap or a Python callback ``tms.py:15-102``).
 
 Spark-native translation: the serve path never touches Spark — tiles come
-from the catalog's z-ordered parquet via DuckDB row-group-pruned point reads
-(:func:`sources.catalog.read_value` semantics) or from a driver-held
-Pyramid; rendering is the pure-Python ColorMap -> PNG pipeline. The HTTP
-front is the stdlib server (threaded), suitable for dev/preview like the
-reference's; production serving would sit behind any WSGI container.
+from the catalog's z-ordered parquet through the catalog's one point-read
+path (the one :func:`sources.catalog.read_value` runs: manifest-pruned
+files, a cursor of the process's shared DuckDB database per read, cells
+decoded through Arrow) or from a driver-held Pyramid; rendering is the
+pure-Python ColorMap -> PNG pipeline. The HTTP front is the stdlib server
+(threaded, one thread per request, each read on its own cursor),
+suitable for dev/preview like the reference's; production serving would
+sit behind any WSGI container.
 """
 
 from __future__ import annotations
@@ -33,18 +36,28 @@ class TileFetcher:
 
 
 class CatalogTileFetcher(TileFetcher):
-    """DuckDB point reads from a catalog layer (no Spark on the hot path).
+    """Point reads from a catalog layer (no Spark on the hot path).
+
+    Each read is the catalog's shared point read: only the manifest
+    files whose zindex range covers the key are opened, the query runs
+    on a cursor of the process's one in-memory DuckDB database (safe
+    for concurrent requests: no two reads share a cursor), and only the
+    ``cells`` column comes back, decoded through Arrow into numpy.
 
     Over-zoom: when z exceeds the deepest stored zoom, the parent tile is
-    cropped and nearest-upsampled (``TileReader.scala:28-44``).
+    cropped and nearest-upsampled (``TileReader.scala:28-44``). With
+    ``allow_overzooming=False`` a zoom that is not stored (deeper than
+    the deepest, or a hole in a sparse zoom set) is a miss (``None``).
     """
 
     def __init__(self, uri: str, layer_name: str, tile_cols: int | None = None,
                  tile_rows: int | None = None, band: int = 0,
                  pyramid_version: str | int | None = None,
-                 refresh_interval: float | None = None):
+                 refresh_interval: float | None = None,
+                 allow_overzooming: bool = True):
         self.uri, self.layer_name = uri, layer_name
         self.band = band
+        self.allow_overzooming = allow_overzooming
         # pyramid time travel (r14, VERDICT r13 #5): resolving a
         # snapshot ONCE here pins every zoom to the layer version one
         # write_pyramid publish committed — a server started mid-
@@ -230,7 +243,7 @@ class CatalogTileFetcher(TileFetcher):
 
     def _read(self, zoom: int, col: int, row: int, pin=None,
               tc: int | None = None, tr: int | None = None):
-        from .sources.catalog import read_value
+        from .sources.catalog import _point_read
 
         if pin is None:
             # ONE _state grab for all defaults — three separate
@@ -240,20 +253,19 @@ class CatalogTileFetcher(TileFetcher):
             tr = tr or dtr
         tc = tc or self.tc
         tr = tr or self.tr
-        rows = read_value(self.uri, self.layer_name, zoom, col, row,
-                          band=self.band, version=pin.get(zoom))
-        if not rows:
+        tbl = _point_read(self.uri, self.layer_name, zoom, col, row,
+                          band=self.band, version=pin.get(zoom),
+                          cells_only=True)
+        if tbl is None:
             return None
-        # rows: named records from read_value (catalog parquet schema)
-        cells = None
-        for r in rows:
-            arr = r.get("cells")
-            if arr is not None and len(arr) == tc * tr:
-                cells = np.asarray(arr, dtype=np.float64)
-                break
-        if cells is None:
-            return None
-        return cells.reshape(tr, tc)
+        # first non-null cell list of the right size (a temporal layer
+        # holds one per instant); nulls inside it decode to NaN
+        for chunk in tbl.column("cells").chunks:
+            for i, n in enumerate(chunk.value_lengths().to_pylist()):
+                if n == tc * tr:
+                    cells = chunk[i].values.to_numpy(zero_copy_only=False)
+                    return cells.astype(np.float64).reshape(tr, tc)
+        return None
 
     def fetch(self, zoom: int, col: int, row: int):
         if self._follow_latest and self._refresh_interval is not None:
@@ -279,7 +291,7 @@ class CatalogTileFetcher(TileFetcher):
             return None
         if zoom in zooms:
             return self._read(zoom, col, row, pin, tc, tr)
-        if zoom < zooms[0]:
+        if zoom < zooms[0] or not self.allow_overzooming:
             return None
         # over-zoom: nearest-sample the ancestor at the nearest STORED
         # shallower zoom (r15 review: a sparse zoom set — e.g. only
@@ -439,13 +451,17 @@ class TMS(TmsServer):
     """Reference-named facade (``tms.py:104-276``): ``TMS.build(source,
     display)`` where source is a ``(catalog_uri, layer_name)`` tuple or a
     Pyramid, and display is a ColorMap, a render callable
-    (cells -> RGBA array), or a :class:`TileRender`."""
+    (cells -> RGBA array), or a :class:`TileRender`.
+    ``allow_overzooming`` goes to the catalog fetcher (a Pyramid source
+    never over-zooms): with False, a zoom that is not stored answers
+    404."""
 
     @classmethod
     def build(cls, source, display, allow_overzooming: bool = True,
               port: int = 0, nodata: float | None = None) -> "TMS":
         if isinstance(source, tuple):
-            fetcher = CatalogTileFetcher(source[0], source[1])
+            fetcher = CatalogTileFetcher(
+                source[0], source[1], allow_overzooming=allow_overzooming)
         else:
             fetcher = PyramidTileFetcher(source)
         cm, render_fn = None, None

@@ -570,6 +570,34 @@ class TestS3PyramidSnapshots:
         assert 0 in p2.levels
 
 
+class TestS3PointRead:
+    def test_point_read_records_and_covering_fetch(self, spark, f1_layer,
+                                                   s3cat):
+        """A point read over the object store returns the stored
+        records and downloads only the file that covers the key."""
+        import numpy as np
+
+        uri = "s3://b/cat"
+        catalog.write(uri, "a", f1_layer, zoom=0, num_files=4)
+        n_files = len(catalog.file_manifest(uri, "a", 0)["files"])
+        assert n_files >= 2
+        n = len(s3cat.requests)
+        recs = catalog.read_value(uri, "a", 0, 0, 0)
+        data_gets = [r for r in s3cat.requests[n:]
+                     if r[0] == "GET" and r[1].endswith(".parquet")]
+        assert len(data_gets) == 1
+        want = np.ones(25)
+        want[0] = 0.0
+        assert len(recs) == 1
+        rec = recs[0]
+        assert set(rec) == {"key_col", "key_row", "band", "cells", "zindex"}
+        assert (rec["key_col"], rec["key_row"], rec["band"]) == (0, 0, 0)
+        assert rec["cells"] == want.tolist()
+        assert catalog.ValueReader(uri, "a", 0).read(0, 0) == recs
+        assert catalog.read_value(uri, "a", 0, 1, 1)[0]["cells"] == [1.0] * 25
+        assert catalog.read_value(uri, "a", 0, 5, 5) == []
+
+
 class TestS3TmsServing:
     """r14: the TMS fetcher serves object-store catalogs — unpinned
     zoom discovery via ListObjectsV2 (the r14 _list_zooms dispatch) and

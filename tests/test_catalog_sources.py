@@ -90,6 +90,57 @@ class TestCatalog:
         assert out.count() == 4
 
 
+    def test_temporal_point_read_records(self, spark, tmp_path):
+        """``instant=`` point reads (read_value and ValueReader) return
+        the stored record of that instant only, as named dicts."""
+        from datetime import datetime, timezone
+
+        md = f1_metadata()
+        t1 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+        t2 = datetime(2024, 2, 1, tzinfo=timezone.utc)
+        tiles = []
+        for kc in range(2):
+            for kr in range(2):
+                tiles.append((kc, kr, t1, 0, np.full((5, 5), kc + 10.0 * kr)))
+                tiles.append((kc, kr, t2, 0, np.full((5, 5), 2.0)))
+        uri = str(tmp_path / "cat")
+        catalog.write(uri, "st", gps.from_numpy(spark, tiles, md), zoom=0)
+        recs = catalog.read_value(uri, "st", 0, 1, 1,
+                                  instant="2024-01-01 00:00:00")
+        assert len(recs) == 1
+        rec = recs[0]
+        assert set(rec) == {"key_col", "key_row", "instant", "band",
+                            "cells", "zindex"}
+        assert (rec["key_col"], rec["key_row"], rec["band"]) == (1, 1, 0)
+        assert rec["instant"] == datetime(2024, 1, 1)
+        assert rec["cells"] == [11.0] * 25
+        both = catalog.read_value(uri, "st", 0, 1, 1)
+        assert sorted(r["instant"] for r in both) == [datetime(2024, 1, 1),
+                                                      datetime(2024, 2, 1)]
+        vr = catalog.ValueReader(uri, "st", 0)
+        assert vr.read(1, 1, zdt=t2)[0]["cells"] == [2.0] * 25
+        assert vr.read(1, 1, zdt="2024-03-01 00:00:00") is None
+
+    def test_write_pyramid_jobs_carry_caller_group(self, spark, f1_layer,
+                                                   tmp_path):
+        """write_pyramid's zoom pool runs its Spark jobs under the
+        caller's job group: none of them start without a group."""
+        from geopyspark_spark.layer import Pyramid
+
+        sc = spark.sparkContext
+        st = sc.statusTracker()
+        before = set(st.getJobIdsForGroup(None))
+        sc.setJobGroup("g", "write_pyramid attribution")
+        try:
+            catalog.write_pyramid(str(tmp_path / "cat"), "p",
+                                  Pyramid({0: f1_layer, 1: f1_layer + 1.0}))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert st.getJobIdsForGroup("g")
+        assert set(st.getJobIdsForGroup(None)) <= before
+
+
 class TestLargeAoiQuery:
     """The scalable spatial-query path (r13): above ``exact_key_limit``
     envelope tiles the driver emits only O(1) envelope bounds and the

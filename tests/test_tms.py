@@ -57,6 +57,148 @@ class TestCatalogFetcher:
         assert nw[0, 0] == 0.0
 
 
+class TestOverzoomFlag:
+    """``allow_overzooming=False`` turns a request deeper than the
+    deepest stored zoom into a miss (None / 404) instead of an
+    upsampled ancestor."""
+
+    def test_fetcher_flag(self, served_catalog):
+        on = gtms.CatalogTileFetcher(served_catalog, "f1")
+        off = gtms.CatalogTileFetcher(served_catalog, "f1",
+                                      allow_overzooming=False)
+        assert on.fetch(4, 0, 0) is not None
+        assert off.fetch(4, 0, 0) is None
+        np.testing.assert_array_equal(off.fetch(3, 1, 0), on.fetch(3, 1, 0))
+
+    @pytest.mark.parametrize("allow", [True, False])
+    def test_tms_build_passes_flag(self, served_catalog, allow):
+        cm = ColorMap.from_colors([0.5, 2.0], [0xFF0000FF, 0x00FF00FF])
+        server = gtms.TMS.build((served_catalog, "f1"), cm,
+                                allow_overzooming=allow)
+        server.bind()
+        try:
+            stored = server.url_pattern.format(z=3, x=1, y=1)
+            with urllib.request.urlopen(stored, timeout=10) as resp:
+                assert resp.status == 200
+            deeper = server.url_pattern.format(z=4, x=2, y=2)
+            if allow:
+                with urllib.request.urlopen(deeper, timeout=10) as resp:
+                    assert resp.status == 200
+            else:
+                with pytest.raises(urllib.error.HTTPError, match="404"):
+                    urllib.request.urlopen(deeper, timeout=10)
+        finally:
+            server.unbind()
+
+
+class TestSharedPointRead:
+    """read_value, ValueReader and CatalogTileFetcher run one point
+    read on one shared DuckDB database, each read on its own cursor."""
+
+    N = 4      # tiles per axis
+    T = 8      # cells per tile axis
+
+    @pytest.fixture(scope="class")
+    def rand_catalog(self, spark, tmp_path_factory):
+        import geopyspark_spark as gps
+
+        n, t = self.N, self.T
+        layout = gps.LayoutDefinition(gps.Extent(0, 0, n * t, n * t),
+                                      gps.TileLayout(n, n, t, t))
+        md = gps.LayerMetadata(
+            crs="epsg:4326", cell_type="float64", layout=layout,
+            bounds=((0, 0), (n - 1, n - 1)), extent=layout.extent,
+            num_bands=1)
+        rng = np.random.default_rng(7)
+        want = {(c, r): rng.random((t, t))
+                for c in range(n) for r in range(n)}
+        layer = gps.from_numpy(
+            spark, [(c, r, 0, a) for (c, r), a in want.items()], md)
+        uri = str(tmp_path_factory.mktemp("randcat"))
+        catalog.write(uri, "rnd", layer, zoom=0, num_files=4)
+        return uri, want
+
+    def test_one_database_across_reads(self, rand_catalog, monkeypatch):
+        import duckdb
+
+        uri, want = rand_catalog
+        calls = []
+        real = duckdb.connect
+
+        def spy(*a, **k):
+            calls.append(a)
+            return real(*a, **k)
+
+        monkeypatch.setattr(duckdb, "connect", spy)
+        monkeypatch.setattr(catalog, "_DUCKDB", None)
+        f = gtms.CatalogTileFetcher(uri, "rnd")
+        vr = catalog.ValueReader(uri, "rnd", 0)
+        for i in range(25):
+            c, r = i % self.N, (i // self.N) % self.N
+            rec = catalog.read_value(uri, "rnd", 0, c, r)
+            assert rec[0]["cells"] == want[(c, r)].ravel().tolist()
+            np.testing.assert_array_equal(f.fetch(0, c, r), want[(c, r)])
+        assert vr.read(1, 2)[0]["cells"] == want[(1, 2)].ravel().tolist()
+        assert len(calls) == 1
+
+    def test_concurrent_fetches_identical(self, rand_catalog, monkeypatch):
+        """8 threads (more than the cores), switching often: every read
+        returns its own tile, and reads never share a cursor, so the
+        idle pool ends with at most one cursor per thread."""
+        import sys
+        from concurrent.futures import ThreadPoolExecutor
+
+        uri, want = rand_catalog
+        monkeypatch.setattr(catalog, "_DUCKDB", None)  # a fresh pool
+        f = gtms.CatalogTileFetcher(uri, "rnd")
+        keys = sorted(want) * 3
+
+        def work(_):
+            return [f.fetch(0, c, r) for c, r in keys]
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                results = list(pool.map(work, range(8), timeout=300))
+        finally:
+            sys.setswitchinterval(old)
+        assert len(results) == 8
+        for got in results:
+            for (c, r), cells in zip(keys, got):
+                np.testing.assert_array_equal(cells, want[(c, r)])
+        assert 1 <= len(catalog._shared_duckdb()[1]) <= 8
+
+    def test_concurrent_http_requests_identical(self, rand_catalog):
+        from concurrent.futures import ThreadPoolExecutor
+
+        uri, want = rand_catalog
+        cm = ColorMap.from_colors([0.25, 0.5, 0.75, 1.0],
+                                  [0xFF0000FF, 0x00FF00FF, 0x0000FFFF,
+                                   0xFFFFFFFF])
+        f = gtms.CatalogTileFetcher(uri, "rnd")
+        srv = gtms.TmsServer(f, color_map=cm).start()
+        try:
+            keys = sorted(want) * 2
+            expect = {k: gtms.render_tile(f, 0, *k, color_map=cm)
+                      for k in want}
+
+            def work(_):
+                out = []
+                for c, r in keys:
+                    url = srv.url_pattern.format(z=0, x=c, y=r)
+                    with urllib.request.urlopen(url, timeout=30) as resp:
+                        out.append(resp.read())
+                return out
+
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                results = list(pool.map(work, range(8)))
+        finally:
+            srv.stop()
+        for got in results:
+            assert got == [expect[k] for k in keys]
+
+
 class TestRenderAndServe:
     def test_render_tile_colormap(self, served_catalog):
         f = gtms.CatalogTileFetcher(served_catalog, "f1")
@@ -565,6 +707,36 @@ class TestDeepZoomGate:
         vr = catalog.ValueReader(deep_catalog, "deep", self.ZOOM)
         got = vr.read(self.BASE + 20, self.BASE + 3)
         assert got and got[0]["cells"][0] == 2003.0
+
+    def test_point_read_opens_only_covering_file(self, deep_catalog,
+                                                 monkeypatch):
+        """A point read on the num_files=8 version hands DuckDB exactly
+        the one file whose manifest zindex range covers the key."""
+        import os
+
+        from geopyspark_spark.core.zindex import z2_py
+
+        seen = []
+        real = catalog._duckdb_file_list
+
+        def spy(files):
+            seen.append([os.path.basename(p) for p in files])
+            return real(files)
+
+        monkeypatch.setattr(catalog, "_duckdb_file_list", spy)
+        key = (self.BASE + 5, self.BASE + 7)
+        entries = catalog.file_manifest(deep_catalog, "deep",
+                                        self.ZOOM)["files"]
+        assert len(entries) >= 4  # range partitioner may merge
+        z = z2_py(*key)
+        covering = [e["name"] for e in entries
+                    if e["zmin"] <= z <= e["zmax"]]
+        assert len(covering) == 1
+        rows = catalog.read_value(deep_catalog, "deep", self.ZOOM, *key)
+        assert rows[0]["cells"][0] == 507.0
+        f = gtms.CatalogTileFetcher(deep_catalog, "deep")
+        assert f.fetch(self.ZOOM, *key)[0, 0] == 507.0
+        assert seen == [covering, covering]
 
     def test_row_group_stats_stay_prunable(self, deep_catalog):
         """The z-sorted multi-file layout must give a point read tight
