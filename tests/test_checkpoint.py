@@ -6,6 +6,8 @@ checkpoints and flips to reliable (checkpoint-dir) ones under
 paths, and the reliable path must fail loudly without a checkpoint
 dir."""
 
+import os
+
 import pytest
 
 from geopyspark_spark.core import checkpoint as ckpt
@@ -49,3 +51,24 @@ def test_default_is_local(spark, monkeypatch):
     df = spark.createDataFrame([(1,)], "x long")
     out = ckpt.materialize(df)
     assert out.collect() == df.collect()
+
+
+SF0001 = "/root/testdata/sf0.001"
+
+
+@pytest.mark.skipif(not os.path.isdir(SF0001), reason="testdata missing")
+def test_pagerank_edge_pin_reliable_matches_local(spark, tmp_path, monkeypatch):
+    """The pagerank query's edge-source pin goes through ``materialize``:
+    in reliable mode it writes to the checkpoint dir, and the ranks are
+    the same rows as with the default local pin."""
+    from geopyspark_spark.plans import driver_queries as dq
+
+    monkeypatch.delenv(ckpt.RELIABLE_ENV, raising=False)
+    base = sorted(dq.q_graph_pagerank(spark, SF0001).collect())
+    assert base
+    ckpt_dir = tmp_path / "ckpt"
+    monkeypatch.setenv(ckpt.RELIABLE_ENV, "1")
+    spark.sparkContext.setCheckpointDir(str(ckpt_dir))
+    assert sorted(dq.q_graph_pagerank(spark, SF0001).collect()) == base
+    assert any(p.is_file() for p in ckpt_dir.rglob("*")), (
+        "reliable mode wrote no checkpoint files")

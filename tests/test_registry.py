@@ -91,12 +91,63 @@ def test_window_order_survives_future_correctness_drop(tmp_path):
 
 
 def test_window_order_covers_registry():
+    """The committed ``_WINDOW_ORDER`` block names every query once."""
     from geopyspark_spark.plans import driver_queries as dq
 
-    canonical = set(dq._canonical_queries().keys())
-    ordered = list(dq.queries().keys())
-    assert len(ordered) == len(set(ordered)), "duplicate names in window order"
-    assert set(ordered) == canonical, "window order must be a permutation of the registry"
+    order = list(dq._WINDOW_ORDER)
+    assert len(order) == len(set(order)), "duplicate names in window order"
+    assert set(order) == set(dq.queries()), (
+        "window order must be a permutation of the registry — run "
+        "`python tools/rotate_window.py --write`")
+
+
+def test_every_q_function_is_registered():
+    """The ``q_<name>`` definitions are the registry: each one is in
+    ``queries()`` under ``<name>``, and nothing else is."""
+    from geopyspark_spark.plans import driver_queries as dq
+
+    defined = {
+        n[2:] for n, v in vars(dq).items() if n.startswith("q_") and callable(v)
+    }
+    qs = dq.queries()
+    assert set(qs) == defined
+    assert all(qs[n] is getattr(dq, "q_" + n) for n in qs)
+
+
+def test_headline_queries_are_registered():
+    import bench
+
+    from geopyspark_spark.plans import driver_queries as dq
+
+    assert set(bench.HEADLINE) <= set(dq.queries()), (
+        set(bench.HEADLINE) - set(dq.queries()))
+
+
+def test_query_added_without_rewrite_is_registered(monkeypatch):
+    """A new ``q_`` function shows up in ``queries()`` (after the
+    generated order) and in ``compute_order`` before anyone reruns
+    ``rotate_window.py --write``."""
+    from rotate_window import compute_order
+
+    from geopyspark_spark.plans import driver_queries as dq
+
+    def q_zz_probe(spark, sf_dir):
+        raise AssertionError("never called")
+
+    monkeypatch.setattr(dq, "q_zz_probe", q_zz_probe, raising=False)
+    qs = dq.queries()
+    assert list(qs)[-1] == "zz_probe" and qs["zz_probe"] is q_zz_probe
+    assert list(qs)[:-1] == dq._WINDOW_ORDER
+    order, keys = compute_order(REPO, max_round=dq._WINDOW_ORDER_ROUND)
+    assert "zz_probe" in order and keys["zz_probe"][0] == 0  # never windowed
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason=f"{SF_DIR} missing")
+def test_oracle_keys_equal_query_keys():
+    os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+    from geopyspark_spark.plans import driver_queries as dq
+
+    assert set(dq.oracle_sql()) == set(dq.queries())
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason=f"{SF_DIR} missing")
@@ -159,13 +210,29 @@ def test_degraded_oracle_mode_warns(monkeypatch):
     assert "emb_kmeans" in out
 
 
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason=f"{SF_DIR} missing")
+def test_non_degradable_oracle_error_raises(monkeypatch):
+    """Only the keys in ``_DEGRADABLE_ORACLES`` may degrade; a failure in
+    any other computed oracle propagates instead of shrinking the gate."""
+    from geopyspark_spark.plans import driver_queries as dq
+
+    def boom(*a, **k):
+        raise FileNotFoundError("sf dir gone")
+
+    os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+    assert "raster_point_values" not in dq._DEGRADABLE_ORACLES
+    monkeypatch.setattr(dq, "_sql_point_values", boom)
+    with pytest.raises(FileNotFoundError):
+        dq.oracle_sql()
+
+
 @pytest.mark.skipif(
     not os.path.isdir("/root/testdata/sf0.001"), reason="testdata missing"
 )
 def test_driver_entry_contract(spark):
     """The driver smoke check as a CI test: entry(spark) runs on sf0.001
     and yields a non-empty result with a stable schema; queries() and
-    oracle_sql() agree on coverage (every oracle key has a query)."""
+    oracle_sql() have the same keys."""
     import __spark_entry__ as entry
 
     df = entry.entry(spark)
@@ -174,8 +241,9 @@ def test_driver_entry_contract(spark):
     assert df.columns == ["band", "zsum", "zmin", "zmax", "zmean", "zcount"]
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    assert set(oracles).issubset(set(qs)), (
-        f"oracle keys without queries: {set(oracles) - set(qs)}"
+    assert set(oracles) == set(qs), (
+        f"oracle keys without queries: {set(oracles) - set(qs)}; "
+        f"queries without oracles: {set(qs) - set(oracles)}"
     )
     # every registry entry is callable
     assert all(callable(fn) for fn in qs.values())

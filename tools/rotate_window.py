@@ -8,10 +8,14 @@ computed from the committed ``CORRECTNESS_r*.json`` history, so the
 window provably cycles through all entries and window claims in the
 CHANGELOG can be re-derived by anyone:
 
-  priority 1: never appeared in any driver window (by canonical position)
-  priority 2: appeared but never green — carried a red  (by canonical pos.)
+  priority 1: never appeared in any driver window
+  priority 2: appeared but never green — carried a red
   priority 3: green before — oldest last-green round first
-              (ties by canonical position)
+
+Ties keep their current ``queries()`` order: position in the committed
+``_WINDOW_ORDER``, then queries not yet in it, in definition order. A
+query is registered by defining ``q_<name>`` and ``SQL_<NAME>`` in the
+target module; ``--write`` then places it in the window order.
 
 Usage:
   python tools/rotate_window.py          # print the computed order + stats
@@ -57,8 +61,8 @@ def compute_order(repo_root: str = ".", max_round: int | None = None) -> tuple[l
 
     from geopyspark_spark.plans import driver_queries as dq
 
-    canonical = list(dq._canonical_queries().keys())
-    idx = {n: i for i, n in enumerate(canonical)}
+    current = list(dq.queries())
+    idx = {n: i for i, n in enumerate(current)}
 
     windowed: dict[str, list[int]] = {}
     last_green: dict[str, int] = {}
@@ -82,8 +86,8 @@ def compute_order(repo_root: str = ".", max_round: int | None = None) -> tuple[l
             return (1, 0, idx[name])
         return (2, last_green[name], idx[name])
 
-    order = sorted(canonical, key=key)
-    return order, {n: key(n) for n in canonical}
+    order = sorted(current, key=key)
+    return order, {n: key(n) for n in current}
 
 
 def history_max_round(repo_root: str = ".") -> int:
