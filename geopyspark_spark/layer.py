@@ -435,11 +435,10 @@ class TiledRasterLayer:
 
         return focal.flow_direction(self)
 
-    def flow_accumulation(self, max_iterations: int | None = None,
-                          method: str = "euler") -> "DataFrame":
+    def flow_accumulation(self) -> "DataFrame":
         from .operators import focal
 
-        return focal.flow_accumulation(self, max_iterations, method)
+        return focal.flow_accumulation(self)
 
     def watershed(self, max_iterations: int = 32) -> "DataFrame":
         from .operators import focal

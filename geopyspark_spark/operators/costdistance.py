@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from .focal import _assemble_buffer, halo_exchange
 from .local import key_cols
+from .reshape import nulls_to_nan
 from ..core.checkpoint import materialize
 
 if TYPE_CHECKING:
@@ -385,14 +386,9 @@ def _split_tiles(result: "TiledRasterLayer", friction: "TiledRasterLayer",
     # restore the exact input key set (edge blocks padded past the
     # layout, and sparse layouts' absent members, must not appear)
     fine = fine.join(friction.df.select(*keys), keys, "left_semi")
-    # Arrow's pandas->JVM hop turns Python NaN inside lists into SQL
-    # null; restore real NaN so blocked output is element-identical to
-    # the unblocked path (which emits JVM NaN literals)
-    fine = fine.withColumn(
-        "cells",
-        F.transform(F.col("cells"),
-                    lambda v: F.coalesce(v, F.lit(float("nan")))),
-    )
+    # restore real NaN so blocked output is element-identical to the
+    # unblocked path (which emits JVM NaN literals)
+    fine = fine.withColumn("cells", nulls_to_nan())
     return TRL(fine, md.with_cell_type("float64"))
 
 

@@ -484,42 +484,28 @@ def flow_direction(layer: "TiledRasterLayer") -> "TiledRasterLayer":
     return _run_kernel(layer, 1, kernel)
 
 
-def flow_accumulation(layer: "TiledRasterLayer",
-                      max_iterations: int | None = None,
-                      method: str = "euler") -> "DataFrame":
+def flow_accumulation(layer: "TiledRasterLayer") -> "DataFrame":
     """D8 flow accumulation: for every cell, the number of cells whose
     flow path passes through it (itself included) — the second half of
     the hydrology pair with :func:`flow_direction`. Because each cell
     has at most one outflow, the flow graph is a forest and the
     accumulation is the subtree size.
 
-    ``method="euler"`` (default, r11) computes subtree sizes the
-    PRAM-classical way: an Euler tour of the flow forest (two arcs per
-    cell, successor function from sibling order) is list-ranked by
-    pointer doubling with distance accumulation, and
-    ``acc = (rank(up-arc) - rank(down-arc) + 1) / 2``. That is
-    O(log cells) self-join rounds REGARDLESS of flow-path length — the
-    scale-correct shape for continental DEMs, where a river's flow path
-    is 10^5+ cells and any per-step fixpoint (rounds = path length)
-    is infeasible.
-
-    ``method="rounds"`` keeps the per-step monotone fixpoint
-    (``acc = 1 + sum(upstream)``, one join + sum per round, early exit
-    at convergence, cap = cell count with a RuntimeWarning on an
-    unconverged explicit cap) as the independent cross-check the gates
-    compare against. Both are integer-exact and engine-exact.
+    Subtree sizes are computed the PRAM-classical way (r11): an Euler
+    tour of the flow forest (two arcs per cell, successor function from
+    sibling order) is list-ranked by pointer doubling with distance
+    accumulation, and ``acc = (rank(up-arc) - rank(down-arc) + 1) / 2``.
+    That is O(log cells) self-join rounds REGARDLESS of flow-path length
+    — the scale-correct shape for continental DEMs, where a river's flow
+    path is 10^5+ cells and any per-step fixpoint (rounds = path length)
+    is infeasible. Integer-exact and engine-exact; a NoData cell is
+    outside the forest and has ``acc = 1``.
 
     Returns (key_col, key_row, pos, acc BIGINT).
     """
-    from pyspark.sql import DataFrame  # noqa: F401
-
-    if method not in ("euler", "rounds"):
-        raise ValueError(f"method must be 'euler' or 'rounds', got {method!r}")
     tl_ = layer.metadata.layout.tile_layout
     total_cells = (tl_.layout_cols * tl_.tile_cols
                    * tl_.layout_rows * tl_.tile_rows)
-    if max_iterations is None:
-        max_iterations = max(2, total_cells)
     fd = flow_direction(layer)
     # ``instant`` rides every key and join below, so SPACETIME layers
     # accumulate per instant — flow never crosses time (SURVEY §7.3)
@@ -531,63 +517,8 @@ def flow_accumulation(layer: "TiledRasterLayer",
           .when(F.col("value").isin(8.0, 16.0, 32.0), -1).otherwise(0))
     dr = (F.when(F.col("value").isin(2.0, 4.0, 8.0), 1)
           .when(F.col("value").isin(32.0, 64.0, 128.0), -1).otherwise(0))
-    if method == "euler":
-        width = tl_.layout_cols * tl_.tile_cols
-        return _flow_acc_euler(cells, tcols, width, total_cells, dc, dr)
-    edges = (
-        cells.where(F.col("value") > 0)
-        .select(*tcols,
-                (F.col("gcol") + dc).alias("dst_c"),
-                (F.col("grow") + dr).alias("dst_r"),
-                F.col("gcol").alias("src_c"), F.col("grow").alias("src_r"))
-        .transform(materialize)
-    )
-    acc = cells.select(*tcols, "gcol", "grow",
-                       F.lit(1).cast("long").alias("acc"))
-    acc = acc.transform(materialize)
-    converged = False
-    for _ in range(max_iterations):
-        cond = (edges["src_c"] == acc["gcol"]) & (edges["src_r"] == acc["grow"])
-        for t in tcols:
-            cond = cond & (edges[t] == acc[t])
-        up = (
-            edges.join(acc, cond)
-            .groupBy("dst_c", "dst_r", *[edges[t] for t in tcols])
-            .agg(F.sum("acc").alias("up_acc"))
-        )
-        new_acc = (
-            cells.select(*tcols, "gcol", "grow")
-            .join(up.withColumnRenamed("dst_c", "gcol")
-                    .withColumnRenamed("dst_r", "grow"),
-                  tcols + ["gcol", "grow"], "left_outer")
-            .select(*tcols, "gcol", "grow",
-                    (F.lit(1) + F.coalesce("up_acc", F.lit(0)))
-                    .cast("long").alias("acc"))
-            .transform(materialize)
-        )
-        changed = (
-            new_acc.withColumnRenamed("acc", "nacc")
-            .join(acc, tcols + ["gcol", "grow"])
-            .where(F.col("nacc") != F.col("acc"))
-            .count()
-        )
-        acc = new_acc
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"flow_accumulation stopped after {max_iterations} iterations "
-            "without converging; counts on flow paths longer than the cap "
-            "are incomplete (raise max_iterations)",
-            RuntimeWarning, stacklevel=2)
-    return (
-        cells.select("key_col", "key_row", *tcols, "pos", "gcol", "grow")
-        .join(acc, tcols + ["gcol", "grow"])
-        .select("key_col", "key_row", *tcols, "pos", "acc")
-    )
+    width = tl_.layout_cols * tl_.tile_cols
+    return _flow_acc_euler(cells, tcols, width, total_cells, dc, dr)
 
 
 def _flow_acc_euler(cells, tcols, width, total_cells, dc, dr):
@@ -667,7 +598,7 @@ def _flow_acc_euler(cells, tcols, width, total_cells, dc, dr):
         "key_col", "key_row", *tcols, "pos",
         (F.col("grow").cast("long") * width + F.col("gcol")).alias("node"))
     # NoData cells are outside the forest: nothing flows into them,
-    # acc = 1 (identical to the rounds-mode contract)
+    # acc = 1
     return (out_nodes.join(acc, tcols + ["node"], "left_outer")
             .select("key_col", "key_row", *tcols, "pos",
                     F.coalesce("acc", F.lit(1)).cast("long").alias("acc")))

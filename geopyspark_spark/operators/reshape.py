@@ -11,7 +11,7 @@ sorted re-assembly); no Python per cell.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .local import key_cols
@@ -45,22 +45,15 @@ def with_global_coords(df_long: DataFrame, tile_cols: int, tile_rows: int) -> Da
 
 
 def assemble_cells(df_long: DataFrame, tile_cols: int, tile_rows: int,
-                   fill: float = float("nan"),
-                   keys: list[str] | None = None) -> DataFrame:
+                   fill: float = float("nan")) -> DataFrame:
     """(key, band, pos, value) -> (key, band, cells array).
 
     Missing positions are filled with ``fill`` (NoData). Assembly is a
     map-side-combining hash aggregate: collect (pos, value) structs, sort,
     scatter into a dense array — all Catalyst expressions.
-
-    ``keys``: the key columns, when the caller already knows them —
-    deriving them from ``df_long.columns`` forces a Catalyst analysis
-    of the input plan, which is pure driver time on deep chained plans
-    (pyramid levels; r17, VERDICT r16 #4).
     """
     n = tile_cols * tile_rows
-    grouped = df_long.groupBy(*(keys if keys is not None
-                                else key_cols(df_long)), "band").agg(
+    grouped = df_long.groupBy(*key_cols(df_long), "band").agg(
         F.map_from_entries(
             F.array_sort(F.collect_list(F.struct("pos", "value")))
         ).alias("_m")
@@ -70,3 +63,13 @@ def assemble_cells(df_long: DataFrame, tile_cols: int, tile_rows: int,
         lambda i: F.coalesce(F.element_at(F.col("_m"), i), F.lit(float(fill))),
     )
     return grouped.withColumn("cells", dense).drop("_m")
+
+
+def nulls_to_nan() -> Column:
+    """The ``cells`` column with every NULL element replaced by NaN.
+
+    Arrow's pandas->JVM conversion turns a Python NaN inside a returned
+    list into SQL NULL; a kernel that returns tiles from pandas restores
+    its NaN NoData cells with this.
+    """
+    return F.transform(F.col("cells"), lambda v: F.coalesce(v, F.lit(float("nan"))))

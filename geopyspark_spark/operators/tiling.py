@@ -9,8 +9,9 @@ Re-expresses:
 Spark shapes:
 - aligned retile = pure JVM re-key (explode -> recompute (key,pos) ->
   assemble): one shuffle, rows = cells, map-side combined;
-- pyramid level z-1 = groupBy(parent cell) downsample — one shuffle per
-  level, built as a Python loop unioning into a zoom-stamped DF;
+- pyramid level z-1 = groupBy(parent key) over whole child tiles: one
+  grouped-map kernel reduces each parent's 2x2 children, one
+  tile-granular shuffle per level, built as a Python loop;
 - stitch is an explicit driver collect with a size guard (100 TB safety).
 """
 
@@ -25,8 +26,7 @@ from pyspark.sql import functions as F
 
 from ..core.extent import Extent, LayoutDefinition, LocalLayout, TileLayout
 from ..core.metadata import LayerMetadata
-from .local import _is_nd
-from .reshape import assemble_cells, with_global_coords
+from .reshape import assemble_cells, nulls_to_nan, with_global_coords
 
 if TYPE_CHECKING:
     from ..layer import Pyramid, TiledRasterLayer
@@ -133,15 +133,17 @@ def tile_to_layout(layer: "TiledRasterLayer", layout,
 def pyramid(layer: "TiledRasterLayer", resample_method: str = "Average") -> "Pyramid":
     """Build the zoom stack down to a 1-tile-ish level by 2x2 reduction.
 
-    Each level is one groupBy shuffle. Aggregating methods (Average,
-    NearestNeighbor = upper-left child, Max, Min, Mode, Median) reduce
-    cell rows JVM-side; interpolating methods (Bilinear, CubicConvolution,
-    CubicSpline, Lanczos) assemble each parent's 2x2 children and run the
-    separable kernels per tile (reference accepts any resample method,
-    ``SpatialTiledRasterLayer.scala:146-171``).
+    Each level is one tile-granular shuffle: child tiles are grouped by
+    parent key and one grouped-map kernel reduces each parent's 2x2
+    children, for any method the reference accepts
+    (``SpatialTiledRasterLayer.scala:146-171``). Aggregating methods
+    (Average, Max, Min, Median, Mode with ties -> smallest value,
+    NearestNeighbor = upper-left valid child) skip NoData and NaN cells,
+    and a parent whose every cell is NoData emits no row. Interpolating
+    methods (Bilinear, CubicConvolution, CubicSpline, Lanczos) run the
+    separable kernels, where a missing or NoData child propagates NoData.
     """
     from ..layer import Pyramid as Pyr
-    from ..layer import TiledRasterLayer as TRL
 
     md = layer.metadata
     tl = md.layout.tile_layout
@@ -156,7 +158,6 @@ def pyramid(layer: "TiledRasterLayer", resample_method: str = "Average") -> "Pyr
     levels = {max_zoom: layer}
     cur = layer
     z = max_zoom
-    nd = md.nodata
     # temporality derived ONCE from the base layer (r17, guide §5
     # driver work / VERDICT r16 #4): every level used to re-derive it
     # from `.columns`, and each such access analyzes the level's whole
@@ -170,76 +171,34 @@ def pyramid(layer: "TiledRasterLayer", resample_method: str = "Average") -> "Pyr
     return Pyr(levels)
 
 
-#: methods reduced as JVM cell aggregates (one narrow shuffle, rows = cells)
-_PYR_AGG = {"AVERAGE", "NEARESTNEIGHBOR", "NEAREST_NEIGHBOR", "MAX", "MIN",
-            "MODE", "MEDIAN"}
-#: interpolating methods reduced per parent tile via resample_tile's
-#: separable kernels (one tile-granular shuffle)
-_PYR_TILE = {"BILINEAR", "CUBICCONVOLUTION", "CUBICSPLINE", "LANCZOS"}
+#: upper-case pyramid resample name -> canonical method name
+_PYR_METHODS = {m.upper(): m for m in (
+    "Average", "Max", "Min", "Median", "Mode", "NearestNeighbor", "Bilinear",
+    "CubicConvolution", "CubicSpline", "Lanczos")} | {"NEAREST_NEIGHBOR": "NearestNeighbor"}
 
 
 def _pyramid_up(layer: "TiledRasterLayer", resample_method: str,
                 temporal: bool | None = None) -> "TiledRasterLayer":
-    from ..layer import TiledRasterLayer as TRL
+    import pandas as pd
 
+    from ..layer import TiledRasterLayer as TRL
+    from .resample import resample_tile
+
+    method = _PYR_METHODS.get(resample_method.upper())
+    if method is None:
+        raise NotImplementedError(f"pyramid resample {resample_method}")
+    aggregating = method not in ("Bilinear", "CubicConvolution",
+                                 "CubicSpline", "Lanczos")
     md = layer.metadata
     tl = md.layout.tile_layout
     tc, tr = tl.tile_cols, tl.tile_rows
-    nd = md.nodata
-    m = resample_method.upper()
-    if m not in _PYR_AGG and m not in _PYR_TILE:
-        raise NotImplementedError(f"pyramid resample {resample_method}")
+    fill = float("nan") if md.nodata is None else float(md.nodata)
     # `.columns`/`key_cols` each force a Catalyst analysis of the
     # level's chained plan; the caller knows the temporality, so derive
     # the key set WITHOUT touching the schema (r17, VERDICT r16 #4)
     if temporal is None:
         temporal = layer.is_temporal
-    keys = ["instant"] if temporal else []
-    base_keys = ["key_col", "key_row", *keys]
-    if m in _PYR_TILE:
-        out_long = None
-        agg = None
-    else:
-        exploded = layer.df.select(
-            *base_keys, "band", F.posexplode("cells").alias("pos", "value"))
-        long = with_global_coords(exploded, tc, tr)
-        valid = long.where(~_is_nd(F.col("value"), nd))
-        parent = valid.withColumn("pgcol", (F.col("gcol") / 2).cast("int")).withColumn(
-            "pgrow", (F.col("grow") / 2).cast("int")
-        )
-        if m == "MODE":
-            # deterministic mode: max count, ties -> smallest value (same
-            # tie-break as every mode kernel in this package)
-            cnt = parent.groupBy(*keys, "band", "pgcol", "pgrow", "value").agg(
-                F.count("*").alias("cnt")
-            )
-            agg = cnt.groupBy(*keys, "band", "pgcol", "pgrow").agg(
-                F.min_by(
-                    "value", F.struct((-F.col("cnt")).alias("nc"), F.col("value").alias("v"))
-                ).alias("value")
-            )
-        else:
-            if m == "AVERAGE":
-                aggv = F.avg("value")
-            elif m in ("NEARESTNEIGHBOR", "NEAREST_NEIGHBOR"):
-                # upper-left child wins: min (grow, gcol) order
-                aggv = F.min_by("value", F.struct(F.col("grow"), F.col("gcol")))
-            elif m == "MAX":
-                aggv = F.max("value")
-            elif m == "MIN":
-                aggv = F.min("value")
-            else:  # MEDIAN
-                aggv = F.median("value")
-            agg = parent.groupBy(*keys, "band", "pgcol", "pgrow").agg(aggv.alias("value"))
-    if agg is not None:
-        out_long = agg.select(
-            (F.col("pgcol") / tc).cast("int").alias("key_col"),
-            (F.col("pgrow") / tr).cast("int").alias("key_row"),
-            *keys,
-            "band",
-            ((F.col("pgrow") % tr) * tc + (F.col("pgcol") % tc)).alias("pos"),
-            "value",
-        )
+    keys = ["key_col", "key_row", *(["instant"] if temporal else []), "band"]
     n_lc = max(1, (tl.layout_cols + 1) // 2)
     n_lr = max(1, (tl.layout_rows + 1) // 2)
     # parent cell = exactly 2x child cell, anchored at the grid's top-left
@@ -258,53 +217,46 @@ def _pyramid_up(layer: "TiledRasterLayer", resample_method: str,
     new_layout = LayoutDefinition(new_ext, TileLayout(n_lc, n_lr, tc, tr))
     (c0, r0), (c1, r1) = md.bounds
     new_md = md.with_layout(new_layout, ((c0 // 2, r0 // 2), (c1 // 2, r1 // 2)))
-    fill = float("nan") if nd is None else float(nd)
-    if out_long is not None:
-        return TRL(assemble_cells(out_long, tc, tr, fill,
-                                  keys=base_keys), new_md)
 
-    # interpolating path: assemble each parent's 2x2 children into a
-    # (2tr, 2tc) buffer and run the separable resample kernels on it —
-    # one tile-granular shuffle, Arrow-batched kernel, strict NaN rule
-    # (a missing/NoData child region propagates NoData, matching the
-    # kernel-warp semantics in reproject.py)
-    from .resample import resample_tile
-
-    resample_tile(np.zeros((2 * tr, 2 * tc)), tr, tc, resample_method, None)
-    import pandas as pd
-
-    keys2 = base_keys + ["band"]
     child = layer.df.select(
         (F.col("key_col") / 2).cast("int").alias("key_col"),
         (F.col("key_row") / 2).cast("int").alias("key_row"),
-        *[c for c in keys2 if c not in ("key_col", "key_row")],
+        *keys[2:],
         (F.col("key_col") % 2).alias("qc"),
         (F.col("key_row") % 2).alias("qr"),
         "cells",
     )
-    schema = ", ".join(
-        ["key_col int", "key_row int"]
-        + (["instant timestamp"] if temporal else [])
-        + ["band int", "cells array<double>"]
-    )
+    schema = ", ".join(["key_col int", "key_row int"]
+                       + (["instant timestamp"] if temporal else [])
+                       + ["band int", "cells array<double>"])
 
-    def reduce_fn(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def reduce_fn(key, pdf):
+        # each parent's 2x2 children in one (2tr, 2tc) buffer, NoData
+        # (and a missing child) as NaN
         buf = np.full((2 * tr, 2 * tc), np.nan)
         for row in pdf.itertuples(index=False):
-            a = np.asarray(row.cells, dtype=np.float64).reshape(tr, tc)
-            if nd is not None and not math.isnan(fill):
-                a = np.where(a == nd, np.nan, a)
             qr, qc = int(row.qr), int(row.qc)
-            buf[qr * tr:(qr + 1) * tr, qc * tc:(qc + 1) * tc] = a
-        out = resample_tile(buf, tr, tc, resample_method, None)
-        if nd is not None and not math.isnan(fill):
+            buf[qr * tr:(qr + 1) * tr, qc * tc:(qc + 1) * tc] = (
+                np.asarray(row.cells, dtype=np.float64).reshape(tr, tc))
+        if not math.isnan(fill):
+            buf[buf == fill] = np.nan
+        if aggregating and np.isnan(buf).all():
+            return pd.DataFrame()
+        if method == "NearestNeighbor":
+            # first valid cell of each 2x2 block in row-major order
+            blk = buf.reshape(tr, 2, tc, 2).transpose(0, 2, 1, 3).reshape(tr, tc, 4)
+            out = np.take_along_axis(
+                blk, np.argmax(~np.isnan(blk), axis=-1)[..., None], axis=-1)[..., 0]
+        else:
+            out = resample_tile(buf, tr, tc, method, None)
+        if not math.isnan(fill):
             out = np.where(np.isnan(out), fill, out)
-        data = {k: [v] for k, v in zip(keys2, key)}
+        data = {k: [v] for k, v in zip(keys, key)}
         data["cells"] = [out.reshape(-1).tolist()]
         return pd.DataFrame(data)
 
-    out_df = child.groupBy(*keys2).applyInPandas(reduce_fn, schema=schema)
-    return TRL(out_df, new_md)
+    out = child.groupBy(*keys).applyInPandas(reduce_fn, schema=schema)
+    return TRL(out.withColumn("cells", nulls_to_nan()), new_md)
 
 
 MAX_STITCH_CELLS = 512 * 1024 * 1024 // 8  # 512 MiB of doubles

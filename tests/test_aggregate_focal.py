@@ -474,6 +474,42 @@ class TestConvolveMoransI:
         assert row["morans_i"] == pytest.approx(-1 / 19, rel=1e-12)
 
 
+#: D8 flow code -> (drow, dcol)
+_D8 = {1: (0, 1), 2: (1, 1), 4: (1, 0), 8: (1, -1),
+       16: (0, -1), 32: (-1, -1), 64: (-1, 0), 128: (-1, 1)}
+
+
+def _ref_flow_acc(layer) -> dict:
+    """{(instant, key_col, key_row, pos): acc} computed directly from
+    the layer's D8 codes: every cell walks its flow path downstream and
+    adds 1 to each cell on it (itself included), so a cell's count is
+    its subtree size. A pit, flat or NoData cell ends the walk."""
+    tl = layer.layout.tile_layout
+    tc, tr = tl.tile_cols, tl.tile_rows
+    h, w = tl.layout_rows * tr, tl.layout_cols * tc
+    codes = {}
+    for r in layer.flow_direction().explode(with_coords=True).collect():
+        t = r["instant"] if "instant" in r.asDict() else None
+        g = codes.setdefault(t, np.zeros((h, w)))
+        g[r["grow"], r["gcol"]] = np.nan if r["value"] is None else r["value"]
+    out = {}
+    for t, g in codes.items():
+        acc = np.zeros((h, w), dtype=np.int64)
+        for r0 in range(h):
+            for c0 in range(w):
+                r, c = r0, c0
+                while True:
+                    acc[r, c] += 1
+                    if not g[r, c] > 0:
+                        break
+                    dr, dc = _D8[int(g[r, c])]
+                    r, c = r + dr, c + dc
+        for r in range(h):
+            for c in range(w):
+                out[(t, c // tc, r // tr, (r % tr) * tc + c % tc)] = int(acc[r, c])
+    return out
+
+
 class TestFlowDirection:
     def test_d8_codes_and_tie_break(self, spark):
         import numpy as np
@@ -552,11 +588,10 @@ class TestFlowDirection:
         assert got[0] == 1
         # conservation: every cell counts itself exactly once at the pit
         assert len(got) == 9 and min(got.values()) >= 1
-        # the O(log)-round Euler-tour default and the per-step fixpoint
-        # are independent formulations — they must agree cell for cell
-        rounds = {r["pos"]: r["acc"]
-                  for r in layer.flow_accumulation(method="rounds").collect()}
-        assert rounds == got
+        # the O(log)-round Euler tour agrees cell for cell with subtree
+        # sizes walked directly from the D8 codes
+        ref = {k[3]: v for k, v in _ref_flow_acc(layer).items()}
+        assert ref == got
 
     def test_flow_accumulation_methods_agree_multitile(self, spark):
         import numpy as np
@@ -578,10 +613,9 @@ class TestFlowDirection:
             [(kc, kr, 0, z[kr * 8:kr * 8 + 8, kc * 8:kc * 8 + 8].copy())
              for kc in range(2) for kr in range(2)], md)
         eu = {(r["key_col"], r["key_row"], r["pos"]): r["acc"]
-              for r in layer.flow_accumulation(method="euler").collect()}
-        ro = {(r["key_col"], r["key_row"], r["pos"]): r["acc"]
-              for r in layer.flow_accumulation(method="rounds").collect()}
-        assert eu == ro and len(eu) == n * n
+              for r in layer.flow_accumulation().collect()}
+        ref = {k[1:]: v for k, v in _ref_flow_acc(layer).items()}
+        assert eu == ref and len(eu) == n * n
 
     def test_flow_accumulation_temporal_per_instant(self, spark):
         """SPACETIME: each instant accumulates its own forest — the
@@ -604,15 +638,16 @@ class TestFlowDirection:
             bounds=((0, 0), (0, 0)), extent=layout.extent, num_bands=1)
         layer = gps.from_numpy(
             spark, [(0, 0, t1, 0, g1), (0, 0, t2, 0, g2)], md)
-        for method in ("euler", "rounds"):
-            got = {(r["instant"].month, r["pos"]): r["acc"]
-                   for r in layer.flow_accumulation(method=method).collect()}
-            # t1 rows: acc 1,2,3 across each row (cols 0,1,2)
-            for row in range(3):
-                assert [got[(1, row * 3 + c)] for c in range(3)] == [1, 2, 3]
-            # t2 columns: acc 1,2,3 down each column
-            for col in range(3):
-                assert [got[(2, r * 3 + col)] for r in range(3)] == [1, 2, 3]
+        got = {(r["instant"].month, r["pos"]): r["acc"]
+               for r in layer.flow_accumulation().collect()}
+        # t1 rows: acc 1,2,3 across each row (cols 0,1,2)
+        for row in range(3):
+            assert [got[(1, row * 3 + c)] for c in range(3)] == [1, 2, 3]
+        # t2 columns: acc 1,2,3 down each column
+        for col in range(3):
+            assert [got[(2, r * 3 + col)] for r in range(3)] == [1, 2, 3]
+        ref = {(k[0].month, k[3]): v for k, v in _ref_flow_acc(layer).items()}
+        assert ref == got
 
     def test_watershed_two_basins(self, spark):
         import numpy as np

@@ -253,6 +253,7 @@ class TestStreamingRasterIngest:
         commit's passes read the pin, so every trigger scans its source
         file exactly once (numInputRows == the file's rows)."""
         import os
+        import time
 
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -279,6 +280,11 @@ class TestStreamingRasterIngest:
                 "band": pa.array([0] * len(keys), pa.int32()),
                 "cells": [[float(i + 1)] * 16 for _ in keys],
             }), os.path.join(src, f"batch-{i}.parquet"))
+            # the file source takes new files in modification-time order,
+            # in milliseconds, and back-to-back writes can share one: ties
+            # come in directory-listing order, so space the files 1 s apart
+            t = time.time() - 60 + i
+            os.utime(os.path.join(src, f"batch-{i}.parquet"), (t, t))
         uri = str(tmp_path / "cat")
         q = stream_into_catalog(
             read_tile_stream(spark, src, md, max_files_per_trigger=1),

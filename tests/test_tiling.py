@@ -259,6 +259,183 @@ class TestPyramidResampleEnum:
             base_layer.pyramid(resample_method="Sinc")
 
 
+_AGGREGATING = ["Average", "NearestNeighbor", "Max", "Min", "Mode", "Median"]
+
+
+def _block_value(vals: list, method: str) -> float:
+    """One parent cell from its 2x2 children (row-major); NaN = NoData."""
+    v = [x for x in vals if not np.isnan(x)]
+    if not v:
+        return np.nan
+    if method == "Average":
+        return float(np.mean(v))
+    if method == "NearestNeighbor":
+        return v[0]
+    if method == "Max":
+        return max(v)
+    if method == "Min":
+        return min(v)
+    if method == "Mode":
+        return min(set(v), key=lambda x: (-v.count(x), x))
+    return float(np.median(v))
+
+
+def _reduce_grid(g: np.ndarray, n_lr: int, n_lc: int, tr: int, tc: int,
+                 method: str) -> np.ndarray:
+    """The parent level's full grid: pad the child grid with NoData to
+    2 x the parent layout, then reduce every 2x2 block."""
+    pad = np.full((2 * n_lr * tr, 2 * n_lc * tc), np.nan)
+    pad[:g.shape[0], :g.shape[1]] = g
+    out = np.empty((n_lr * tr, n_lc * tc))
+    for r in range(out.shape[0]):
+        for c in range(out.shape[1]):
+            blk = pad[2 * r:2 * r + 2, 2 * c:2 * c + 2]
+            out[r, c] = _block_value(list(blk.reshape(-1)), method)
+    return out
+
+
+class TestPyramidBlockReference:
+    """Every level of an aggregating pyramid equals a numpy 2x2 block
+    reduction, on a 3x3 layout of 4x4 tiles with NoData holes, a missing
+    child tile (2, 0), an all-NoData tile (2, 2) whose parent (1, 1) has
+    no other child, and 2 bands; spatial (NaN and ud-1 NoData) and
+    temporal (2 instants) variants."""
+
+    TC = TR = 4
+    N = 3
+
+    def _grids(self, temporal: bool) -> dict:
+        """{(instant, band): full grid}, NaN where NoData or no tile."""
+        from datetime import datetime
+
+        rng = np.random.default_rng(11)
+        # naive local instants: they collect back unchanged
+        instants = ([datetime(2024, 1, 1), datetime(2024, 2, 1)]
+                    if temporal else [None])
+        grids = {}
+        for t in instants:
+            for b in range(2):
+                # few distinct small integers: Mode ties and exact sums
+                g = rng.integers(0, 4, (self.N * self.TR, self.N * self.TC))
+                g = g.astype(float) + 10 * b
+                g[rng.random(g.shape) < 0.2] = np.nan
+                g[0:self.TR, 2 * self.TC:] = np.nan            # tile (2, 0)
+                g[2 * self.TR:, 2 * self.TC:] = np.nan         # tile (2, 2)
+                grids[(t, b)] = g
+        return grids
+
+    def _layer(self, spark, grids: dict, cell_type: str):
+        layout = gps.LayoutDefinition(
+            gps.Extent(0, 0, 12, 12), gps.TileLayout(self.N, self.N, self.TC, self.TR))
+        md = gps.LayerMetadata(
+            crs="epsg:4326", cell_type=cell_type, layout=layout,
+            bounds=((0, 0), (self.N - 1, self.N - 1)), extent=layout.extent,
+            num_bands=2, zoom=2,
+        )
+        fill = -1.0 if cell_type.endswith("ud-1") else np.nan
+        tiles = []
+        for (t, b), g in grids.items():
+            for kc in range(self.N):
+                for kr in range(self.N):
+                    if (kc, kr) == (2, 0):
+                        continue                               # missing tile
+                    a = g[kr * self.TR:(kr + 1) * self.TR, kc * self.TC:(kc + 1) * self.TC]
+                    a = np.where(np.isnan(a), fill, a)
+                    tiles.append((kc, kr, b, a) if t is None else (kc, kr, t, b, a))
+        return gps.from_numpy(spark, tiles, md)
+
+    def _collect(self, level, fill: float) -> dict:
+        """{(instant, band, key_col, key_row): (TR, TC) array}, NaN = NoData."""
+        out = {}
+        for row in level.df.collect():
+            assert all(v is not None for v in row.cells), "NULL cell"
+            a = np.asarray(row.cells, dtype=float).reshape(self.TR, self.TC)
+            if not np.isnan(fill):
+                a = np.where(a == fill, np.nan, a)
+            t = row["instant"] if "instant" in row.asDict() else None
+            out[(t, row.band, row.key_col, row.key_row)] = a
+        return out
+
+    @pytest.mark.parametrize("variant", ["nan", "ud", "temporal"])
+    @pytest.mark.parametrize("method", _AGGREGATING)
+    def test_levels_match_numpy_blocks(self, spark, method, variant):
+        cell_type = "float64ud-1" if variant == "ud" else "float64"
+        fill = -1.0 if variant == "ud" else np.nan
+        grids = self._grids(variant == "temporal")
+        pyr = self._layer(spark, grids, cell_type).pyramid(resample_method=method)
+        assert set(pyr.levels) == {2, 1, 0}
+        n = self.N
+        for z in (1, 0):
+            n_l = max(1, (n + 1) // 2)
+            grids = {k: _reduce_grid(g, n_l, n_l, self.TR, self.TC, method)
+                     for k, g in grids.items()}
+            n = n_l
+            tl = pyr[z].layout.tile_layout
+            assert (tl.layout_cols, tl.layout_rows) == (n, n)
+            # an aggregating level has a row for a (key, band) iff some
+            # cell of it is not NoData
+            want = {}
+            for (t, b), g in grids.items():
+                for kc in range(n):
+                    for kr in range(n):
+                        a = g[kr * self.TR:(kr + 1) * self.TR, kc * self.TC:(kc + 1) * self.TC]
+                        if not np.isnan(a).all():
+                            want[(t, b, kc, kr)] = a
+            got = self._collect(pyr[z], fill)
+            assert set(got) == set(want), z
+            if z == 1:
+                # the all-NoData tile's parent is absent, the others are not
+                assert {(k[2], k[3]) for k in got} == {(0, 0), (1, 0), (0, 1)}
+            for k, a in want.items():
+                np.testing.assert_allclose(got[k], a, rtol=1e-12, atol=0,
+                                           err_msg=f"z={z} {k}")
+
+    @pytest.mark.parametrize("method", ["Average", "Bilinear"])
+    def test_nodata_cells_are_nan_not_null(self, spark, method):
+        """Arrow's pandas->JVM hop turns a NaN inside a returned list into
+        SQL NULL; pyramid levels must still hold NaN NoData cells."""
+        grids = self._grids(False)
+        pyr = self._layer(spark, grids, "float64").pyramid(resample_method=method)
+        for z in (1, 0):
+            assert pyr[z].df.selectExpr("explode(cells) v").where("v IS NULL").count() == 0
+        got = self._collect(pyr[1], np.nan)
+        side = 2 * self.TR                     # level 1: 2x2 tiles of 4x4
+        for b in range(2):
+            pad = np.full((2 * side, 2 * side), np.nan)
+            pad[:self.N * self.TR, :self.N * self.TC] = grids[(None, b)]
+            blocks = pad.reshape(side, 2, side, 2).transpose(0, 2, 1, 3).reshape(side, side, 4)
+            # Average: NaN iff the whole block is NoData; Bilinear (2x2
+            # taps, strict NoData rule): NaN iff any cell of it is
+            nan_at = (np.isnan(blocks).all(axis=2) if method == "Average"
+                      else np.isnan(blocks).any(axis=2))
+            # Bilinear keeps the all-NoData tile's parent; Average drops it
+            assert ((None, b, 1, 1) in got) == (method == "Bilinear")
+            for (t, bb, kc, kr), a in got.items():
+                if bb == b:
+                    want = nan_at[kr * self.TR:(kr + 1) * self.TR,
+                                  kc * self.TC:(kc + 1) * self.TC]
+                    assert np.array_equal(np.isnan(a), want), (method, b, kc, kr)
+
+    @pytest.mark.parametrize("cell_type", ["float64ud-1", "float64raw"])
+    @pytest.mark.parametrize("method,want", [("Median", 3.0), ("Average", 3.0),
+                                             ("Max", 5.0)])
+    def test_nan_skipped_when_nodata_is_not_nan(self, spark, cell_type, method, want):
+        """A NaN cell in a layer whose NoData is a number (or absent) is
+        skipped like NoData: the Median of {1, 3, 5, NaN} is 3.0 and its
+        Average 3.0 (a per-cell reduce gave 4.0 and NaN)."""
+        layout = gps.LayoutDefinition(gps.Extent(0, 0, 4, 2), gps.TileLayout(2, 1, 2, 2))
+        md = gps.LayerMetadata(
+            crs="epsg:4326", cell_type=cell_type, layout=layout,
+            bounds=((0, 0), (1, 0)), extent=layout.extent, zoom=1,
+        )
+        tiles = [(0, 0, 0, np.array([[1.0, 3.0], [5.0, np.nan]])),
+                 (1, 0, 0, np.array([[7.0, 7.0], [7.0, 7.0]]))]
+        pyr = gps.from_numpy(spark, tiles, md).pyramid(resample_method=method)
+        (row,) = pyr[0].df.collect()
+        assert row.cells[0] == want
+        assert row.cells[1] == 7.0
+
+
 class TestGlobalLayoutPolar:
     def test_polar_grids_have_world_extents(self, f1_layer):
         """epsg:3031/3413 GlobalLayout grids the conventional +-2^22 m
