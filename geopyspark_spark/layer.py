@@ -566,7 +566,6 @@ class TiledRasterLayer:
         to every key's full multiband tile (``layer.py:1449-1470``).
         Band count may not change."""
         import numpy as np
-        import pandas as pd
 
         tl = self.metadata.layout.tile_layout
         tc, tr = tl.tile_cols, tl.tile_rows
@@ -574,7 +573,7 @@ class TiledRasterLayer:
         keys = [c for c in ("key_col", "key_row", "instant") if c in self.df.columns]
         schema = self.df.schema
 
-        def apply_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def apply_fn(key, pdf):
             pdf = pdf.sort_values("band")
             tile = np.stack(
                 [np.asarray(c, dtype=np.float64).reshape(tr, tc) for c in pdf["cells"]]

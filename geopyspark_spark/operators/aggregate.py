@@ -193,7 +193,6 @@ def temporal_moving_average(layer, k: int = 3):
     bit-for-bit.
     """
     import numpy as np
-    import pandas as pd
 
     from ..layer import TiledRasterLayer
 
@@ -202,7 +201,7 @@ def temporal_moving_average(layer, k: int = 3):
     nd = md.nodata
     fill = float("nan") if nd is None else float(nd)
 
-    def roll(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def roll(key, pdf):
         pdf = pdf.sort_values("instant")
         arr = np.stack([np.asarray(c, dtype=np.float64) for c in pdf["cells"]])
         a = arr.copy()

@@ -10,7 +10,15 @@ between 8-adjacent cells a->b is ``dist(a,b) * (f(a) + f(b)) / 2`` with
 dist 1 for rook moves and sqrt(2) for diagonal moves (cell units);
 ``max_distance`` truncates the frontier.
 
-Spark physical plan (the reference's Pregel pattern, DataFrame-shaped):
+Spark physical plan:
+
+  0. **one block** (the layout fits one ``block_cells`` super-tile block
+     and ``max_iterations`` is not pinned): one lazy
+     ``groupBy(instant, band).applyInPandas`` runs one exact local
+     relaxation per plane; with no block ring to exchange it is the
+     global fixpoint, so there is no loop and no job at build.
+
+Otherwise the reference's Pregel pattern, DataFrame-shaped: a
 driver-coordinated fixpoint loop. Each round the ACTIVE frontier is the
 set of tiles whose own or 8-neighbor ``improved`` was > 0 last round
 (the reference's ``IterativeCostDistance`` is likewise change-driven);
@@ -241,6 +249,24 @@ def _local_relax(dist: np.ndarray, fric: np.ndarray, max_distance: float) -> np.
     return d
 
 
+def _seed_mask(geoms, layout, col0: int, row0: int, w: int, h: int) -> np.ndarray:
+    """(h, w) source mask of the cell window whose top-left cell is the
+    global cell (``col0``, ``row0``) of ``layout``: a polygon seeds the
+    cells whose centers it contains, a point the cell it falls in."""
+    from ..core.geom import MultiPolygon, Point, Polygon
+
+    cw, ch = layout.cell_width, layout.cell_height
+    x = layout.extent.xmin + col0 * cw + (np.tile(np.arange(w), h) + 0.5) * cw
+    y = layout.extent.ymax - row0 * ch - (np.repeat(np.arange(h), w) + 0.5) * ch
+    m = np.zeros(w * h, dtype=bool)
+    for g in geoms:
+        if isinstance(g, (Polygon, MultiPolygon)):
+            m |= g.contains_points(x, y)
+        elif isinstance(g, Point):
+            m |= (np.abs(x - g.x) <= cw / 2) & (np.abs(y - g.y) <= ch / 2)
+    return m.reshape(h, w)
+
+
 def _expand_keys_tagged(keys_df, key_names: list[str], radius: int):
     """Dilate a tile-key set by ``radius`` in (key_col, key_row) Chebyshev
     distance, tagging each output key with its min distance to the input
@@ -299,6 +325,13 @@ def _coalesced_metadata(md, g: int):
     )
 
 
+def _tile_schema(layer: "TiledRasterLayer") -> str:
+    """DDL schema of a float64 tile DataFrame keyed like ``layer``."""
+    return ", ".join(["key_col int", "key_row int"]
+                     + (["instant timestamp"] if layer.is_temporal else [])
+                     + ["band int", "cells array<double>"])
+
+
 def _coalesce_tiles(friction: "TiledRasterLayer", g: int) -> "TiledRasterLayer":
     """Regroup a layer into ``g``x``g``-tile super-tiles (one kernel-side
     numpy paste per block; absent members fill NaN = impassable).
@@ -314,13 +347,9 @@ def _coalesce_tiles(friction: "TiledRasterLayer", g: int) -> "TiledRasterLayer":
     extra = [k for k in keys if k not in ("key_col", "key_row")]
     df = friction.df.withColumn("_skc", F.floor(F.col("key_col") / g).cast("int")) \
                     .withColumn("_skr", F.floor(F.col("key_row") / g).cast("int"))
-    out_schema = ", ".join(
-        ["key_col int", "key_row int"]
-        + (["instant timestamp"] if friction.is_temporal else [])
-        + ["band int", "cells array<double>"]
-    )
+    out_schema = _tile_schema(friction)
 
-    def paste(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def paste(key, pdf):
         arr = np.full((g * tr, g * tc), np.nan)
         skc, skr = int(key[0]), int(key[1])
         for tup in pdf.itertuples(index=False):
@@ -354,11 +383,7 @@ def _split_tiles(result: "TiledRasterLayer", friction: "TiledRasterLayer",
     tc, tr = tl.tile_cols, tl.tile_rows
     keys = key_cols(friction.df) + ["band"]
     extra = [k for k in keys if k not in ("key_col", "key_row")]
-    out_schema = ", ".join(
-        ["key_col int", "key_row int"]
-        + (["instant timestamp"] if friction.is_temporal else [])
-        + ["band int", "cells array<double>"]
-    )
+    out_schema = _tile_schema(friction)
     cols = ["key_col", "key_row"] + extra + ["cells"]
 
     def split_batch(batches):
@@ -390,6 +415,53 @@ def _split_tiles(result: "TiledRasterLayer", friction: "TiledRasterLayer",
     # unblocked path (which emits JVM NaN literals)
     fine = fine.withColumn("cells", nulls_to_nan())
     return TRL(fine, md.with_cell_type("float64"))
+
+
+def _cost_distance_one_block(friction: "TiledRasterLayer", geometries,
+                             max_distance: float) -> "TiledRasterLayer":
+    """Cost distance of a layout that fits one super-tile block: one
+    lazy grouped-map task per (instant, band) plane pastes its tiles
+    into an (H+2, W+2) buffer with a NaN friction ring and runs ONE
+    :func:`_local_relax`. The ring is the layout's edge, so that local
+    fixpoint is the global one. Emits exactly the input's tile keys."""
+    from ..layer import TiledRasterLayer as TRL
+    from ..layer import _normalize_geoms
+
+    md = friction.metadata
+    tl = md.layout.tile_layout
+    tc, tr = tl.tile_cols, tl.tile_rows
+    W, H = tl.layout_cols * tc, tl.layout_rows * tr
+    nd = md.nodata
+    geoms = _normalize_geoms(geometries)
+    plane = [k for k in key_cols(friction.df) + ["band"]
+             if k not in ("key_col", "key_row")]
+    out_schema = _tile_schema(friction)
+    _loop_stats["one_block"] = True
+
+    def solve(key, pdf):
+        kcs = pdf["key_col"].to_numpy(np.int64)
+        krs = pdf["key_row"].to_numpy(np.int64)
+        fb = np.full((H + 2, W + 2), np.nan)
+        for kc, kr, cells in zip(kcs, krs, pdf["cells"]):
+            fb[1 + kr * tr:1 + (kr + 1) * tr, 1 + kc * tc:1 + (kc + 1) * tc] = \
+                np.asarray(cells, dtype=np.float64).reshape(tr, tc)
+        if nd is not None and not math.isnan(nd):
+            fb[fb == nd] = np.nan
+        d = np.full((H + 2, W + 2), _BIG)
+        seeds = _seed_mask(geoms, md.layout, 0, 0, W, H) & ~np.isnan(fb[1:-1, 1:-1])
+        d[1:-1, 1:-1][seeds] = 0.0
+        d = _local_relax(d, fb, max_distance)[1:-1, 1:-1]
+        d[d >= _BIG] = np.nan
+        out = {"key_col": kcs, "key_row": krs}
+        for k, v in zip(plane, key):
+            out[k] = [v] * len(kcs)
+        out["cells"] = [d[kr * tr:(kr + 1) * tr, kc * tc:(kc + 1) * tc]
+                        .reshape(-1).tolist() for kc, kr in zip(kcs, krs)]
+        return pd.DataFrame(out)
+
+    solved = friction.df.groupBy(*plane).applyInPandas(solve, schema=out_schema)
+    return TRL(solved.withColumn("cells", nulls_to_nan()),
+               md.with_cell_type("float64"))
 
 
 #: unconverged blocked-fixpoint rounds before strategy="auto" escapes
@@ -479,8 +551,13 @@ def cost_distance(
     in-block Gauss-Seidel then swallows every reversal inside a block
     in ONE round, cutting the round count by ~``g``. At 100 TB the cap
     bounds per-task memory while the block count still dwarfs the
-    cluster's parallelism; on toy grids the whole layout collapses into
-    one block and the loop converges in a round or two.
+    cluster's parallelism.
+
+    **One block.** When ``g`` covers both layout axes and
+    ``max_iterations`` is not given, one exact local relaxation per
+    (instant, band) plane in one lazy grouped-map task
+    (:func:`_cost_distance_one_block`) is the answer under ``"auto"``
+    and ``"fixpoint"``, and building it runs no Spark job.
 
     ``max_iterations`` defaults to the TOTAL CELL COUNT of the original
     layout (``layout_cols * layout_rows * tile_cols * tile_rows``): each
@@ -520,6 +597,7 @@ def cost_distance(
     """
     if strategy not in ("auto", "fixpoint", "two_level"):
         raise ValueError(f"unknown cost_distance strategy {strategy!r}")
+    _loop_stats["one_block"] = False
     if strategy == "two_level":
         if friction.is_temporal:
             raise ValueError(
@@ -545,6 +623,9 @@ def cost_distance(
         # loose cap costs nothing.
         max_iterations = max(
             2, tl.layout_cols * tl.layout_rows * tl.tile_cols * tl.tile_rows)
+    if not user_capped and g >= tl.layout_cols and g >= tl.layout_rows:
+        # one block: its exact local relaxation is the global answer
+        return _cost_distance_one_block(friction, geometries, max_distance)
     if g <= 1:
         return _cost_distance_core(friction, geometries, max_distance,
                                    max_iterations)
@@ -579,7 +660,6 @@ def _cost_distance_core(
 ) -> "TiledRasterLayer":
     """One-tile-granularity fixpoint loop (see :func:`cost_distance`,
     which wraps it in super-tile blocking)."""
-    from ..core.geom import MultiPolygon, Point, Polygon
     from ..layer import TiledRasterLayer as TRL
     from ..layer import _normalize_geoms
 
@@ -594,21 +674,6 @@ def _cost_distance_core(
             2, tl.layout_cols * tl.layout_rows * tl.tile_cols * tl.tile_rows)
     nd = md.nodata
     geoms = _normalize_geoms(geometries)
-    cw, ch = md.layout.cell_width, md.layout.cell_height
-    exmin, eymax = md.layout.extent.xmin, md.layout.extent.ymax
-
-    def seed_mask(kc: int, kr: int) -> np.ndarray:
-        col_idx = np.tile(np.arange(tc), tr).astype(float)
-        row_idx = np.repeat(np.arange(tr), tc).astype(float)
-        x = exmin + kc * tc * cw + (col_idx + 0.5) * cw
-        y = eymax - kr * tr * ch - (row_idx + 0.5) * ch
-        m = np.zeros(tc * tr, dtype=bool)
-        for g in geoms:
-            if isinstance(g, (Polygon, MultiPolygon)):
-                m |= g.contains_points(x, y)
-            elif isinstance(g, Point):
-                m |= (np.abs(x - g.x) <= cw / 2) & (np.abs(y - g.y) <= ch / 2)
-        return m
 
     keys = key_cols(friction.df) + ["band"]
     key_names = list(keys)
@@ -621,7 +686,8 @@ def _cost_distance_core(
                 fr = np.asarray(rec["cells"], dtype=np.float64)
                 if nd is not None and not math.isnan(nd):
                     fr = np.where(fr == nd, np.nan, fr)
-                m = seed_mask(int(rec["key_col"]), int(rec["key_row"]))
+                m = _seed_mask(geoms, md.layout, int(rec["key_col"]) * tc,
+                               int(rec["key_row"]) * tr, tc, tr).reshape(-1)
                 seeded = m & ~np.isnan(fr)
                 dist = np.where(seeded, 0.0, _BIG)
                 rec["cells"] = fr.tolist()
@@ -718,7 +784,7 @@ def _cost_distance_core(
     frag_f = halo_exchange(state.select(*key_names, "cells"), tc, tr, 1).persist()
     frag_f.count()
 
-    def relax(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def relax(key, pdf):
         fpdf = pdf[pdf["frag"].notna()]
         fbuf = _assemble_buffer(fpdf, tc, tr, 1, np.nan) if len(fpdf) else None
         dpdf = pdf[pdf["frag_d"].notna()].copy()
@@ -1443,7 +1509,6 @@ def _cost_distance_two_level(
     every prefix is within it too (costs are non-negative), so running
     phases 1-3 untruncated and masking at phase 4 returns the
     truncated fixpoint."""
-    from ..core.geom import MultiPolygon, Point, Polygon
     from ..layer import TiledRasterLayer as TRL
     from ..layer import _normalize_geoms
 
@@ -1465,21 +1530,6 @@ def _cost_distance_two_level(
     W = btl.layout_cols * bw
     H = btl.layout_rows * bh
     geoms = _normalize_geoms(geometries)
-    cw, ch = bmd.layout.cell_width, bmd.layout.cell_height
-    exmin, eymax = bmd.layout.extent.xmin, bmd.layout.extent.ymax
-
-    def seed_mask(kc: int, kr: int) -> np.ndarray:
-        col_idx = np.tile(np.arange(bw), bh).astype(float)
-        row_idx = np.repeat(np.arange(bh), bw).astype(float)
-        x = exmin + kc * bw * cw + (col_idx + 0.5) * cw
-        y = eymax - kr * bh * ch - (row_idx + 0.5) * ch
-        m = np.zeros(bw * bh, dtype=bool)
-        for gm in geoms:
-            if isinstance(gm, (Polygon, MultiPolygon)):
-                m |= gm.contains_points(x, y)
-            elif isinstance(gm, Point):
-                m |= (np.abs(x - gm.x) <= cw / 2) & (np.abs(y - gm.y) <= ch / 2)
-        return m.reshape(bh, bw)
 
     key_names = key_cols(blocks.df) + ["band"]
     frag_f = halo_exchange(blocks.df.select(*key_names, "cells"), bw, bh, 1)
@@ -1494,7 +1544,7 @@ def _cost_distance_two_level(
         # global cell id of the block's (0,0) cell for this band plane
         return (band * H + kr * bh) * W + kc * bw
 
-    def emit_edges(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def emit_edges(key, pdf):
         fb = _assemble_buffer(pdf, bw, bh, 1, np.nan)
         if fb is None:  # halo target with no center block (grid edge)
             return pd.DataFrame({"src": pd.array([], dtype="int64"),
@@ -1508,7 +1558,7 @@ def _cost_distance_two_level(
         bmask[0, :] = bmask[-1, :] = True
         bmask[:, 0] = bmask[:, -1] = True
         brs, bcs = np.nonzero(bmask & passable)
-        seeds = seed_mask(kc, kr) & passable
+        seeds = _seed_mask(geoms, bmd.layout, kc * bw, kr * bh, bw, bh) & passable
         S = len(brs)
         base = gid0(kc, kr, band)
         src_parts, dst_parts, w_parts = [], [], []
@@ -1617,7 +1667,7 @@ def _cost_distance_two_level(
     out_schema = ", ".join(
         ["key_col int", "key_row int", "band int", "cells array<double>"])
 
-    def finalize(key, pdf: pd.DataFrame, bd: pd.DataFrame) -> pd.DataFrame:
+    def finalize(key, pdf, bd):
         fb = _assemble_buffer(pdf, bw, bh, 1, np.nan)
         cols = ["key_col", "key_row", "band", "cells"]
         if fb is None:  # halo target with no center block (grid edge)
@@ -1646,10 +1696,11 @@ def _cost_distance_two_level(
             v = dists_a[pos_c[hit]]
             keep = v <= max_distance
             d[brs[hit][keep] + 1, bcs[hit][keep] + 1] = v[keep]
-        seeds = seed_mask(kc, kr) & passable
+        seeds = _seed_mask(geoms, bmd.layout, kc * bw, kr * bh, bw, bh) & passable
         d[1:-1, 1:-1][seeds] = 0.0
         d = _local_relax(d, fb, max_distance)
         center = d[1:-1, 1:-1]
+        center[center >= _BIG] = np.nan  # _split_tiles restores NULL -> NaN
         data = {"key_col": [kc], "key_row": [kr], "band": [band],
                 "cells": [center.reshape(-1).tolist()]}
         return pd.DataFrame(data, columns=cols)
@@ -1657,13 +1708,4 @@ def _cost_distance_two_level(
     result = frag_f.groupBy(*key_names).cogroup(
         keyed.groupBy("key_col", "key_row", "band")
     ).applyInPandas(finalize, schema=out_schema)
-    coarse = TRL(
-        result.withColumn(
-            "cells",
-            F.transform(F.col("cells"),
-                        lambda v: F.when(v >= F.lit(_BIG),
-                                         F.lit(float("nan"))).otherwise(v)),
-        ),
-        bmd,
-    )
-    return _split_tiles(coarse, friction, g)
+    return _split_tiles(TRL(result, bmd), friction, g)

@@ -270,7 +270,7 @@ def _run_kernel(layer: "TiledRasterLayer", radius: int, kernel,
         out_nd = parse_cell_type(out_cell_type).nodata
     out_fill = float("nan") if out_nd is None else float(out_nd)
 
-    def apply_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def apply_fn(key, pdf):
         buf = _assemble_buffer(pdf, tc, tr, radius, fill)
         if buf is None:
             return pd.DataFrame(
@@ -886,7 +886,7 @@ def morans_i(layer: "TiledRasterLayer", band: int = 0) -> DataFrame:
     schema = ("s1 double, s2 double, s3 double, s4 double, "
               "s double, ss double, n long")
 
-    def partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def partials(key, pdf):
         buf = _assemble_buffer(pdf, tc, tr, 1, fill)
         if buf is None:
             return pd.DataFrame(

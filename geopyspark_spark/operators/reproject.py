@@ -226,7 +226,7 @@ def reproject(layer: "TiledRasterLayer", target_crs: str,
         StructField("cells", ArrayType(DoubleType())),
     ])
 
-    def warp(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def warp(key, pdf):
         tkc, tkr, band = int(key[0]), int(key[1]), int(key[2])
         text = tgt_kt.key_extent(tkc, tkr)
         # target cell centers, row-major

@@ -906,7 +906,7 @@ def to_geotiff_rdd(layer, compress: bool = True):
         StructField("tiff", BinaryType()),
     ])
 
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(key, pdf):
         kc, kr = int(key[0]), int(key[1])
         pdf = pdf.sort_values("band")
         cells = np.stack(

@@ -932,3 +932,160 @@ def test_blocked_non_divisible_layout(spark):
         np.testing.assert_allclose(
             np.nan_to_num(np.asarray(got[k]), nan=-1.0),
             np.nan_to_num(np.asarray(exp[k]), nan=-1.0), atol=1e-9)
+
+
+# ---- one-block solve --------------------------------------------------------
+
+def _ref_sources(fric, cells, max_d=np.inf):
+    """Exact multi-source distances: the min over single-source
+    :func:`_ref_dijkstra_grid` runs, truncated at ``max_d``."""
+    out = np.full(fric.shape, np.nan)
+    for r, c in cells:
+        d = _ref_dijkstra_grid(fric, r, c)
+        out = np.fmin(out, d)
+    out[out > max_d] = np.nan
+    return out
+
+
+def _one_block_case(name):
+    """(planes {(instant, band): friction (H, W) with NaN walls}, tile
+    size, cell type, absent tile key, source point cells, source
+    rectangle (r0, c0, r1, c1) or None, max_distance)."""
+    import datetime
+
+    rng = np.random.default_rng(sum(map(ord, name)))
+
+    def fric(h, w):
+        f = rng.uniform(0.5, 3.0, size=(h, w))
+        f[rng.random((h, w)) < 0.12] = np.nan
+        f[h // 2, 2:] = np.nan  # a wall with one gap at the west edge
+        return f
+
+    planes = {(None, 0): fric(32, 32)}
+    tsz, cell_type, drop, points, rect, max_d = 8, "float64", None, [(3, 4)], None, np.inf
+    if name == "nodata_sentinel":
+        cell_type = "float64ud-1.0"
+    elif name == "non_square":
+        planes = {(None, 0): fric(16, 24)}  # 3x2 tiles
+        points = [(12, 20)]
+    elif name == "absent_tile":
+        drop = (1, 1)
+    elif name == "point_and_polygon":
+        points, rect = [(28, 3)], (20, 22, 23, 26)
+    elif name == "max_distance":
+        max_d = 12.0
+    elif name == "temporal":
+        t0 = datetime.datetime(2020, 1, 1)
+        planes = {(t0, 0): fric(32, 32),
+                  (t0 + datetime.timedelta(days=1), 0): fric(32, 32)}
+    elif name == "two_bands":
+        planes = {(None, 0): fric(32, 32), (None, 1): fric(32, 32)}
+    for f in planes.values():
+        for r, c in points:
+            f[r, c] = 1.0  # passable seeds
+    return planes, tsz, cell_type, drop, points, rect, max_d
+
+
+_ONE_BLOCK_CASES = ("nan_walls", "nodata_sentinel", "non_square", "absent_tile",
+                    "point_and_polygon", "max_distance", "temporal", "two_bands")
+
+
+class TestOneBlock:
+    """A layout that fits one super-tile block is solved by one exact
+    local relaxation per (instant, band) plane, without the fixpoint
+    loop: it must agree with the tile-granular loop and with an exact
+    Dijkstra, keep the input's key set and emit NaN, never NULL."""
+
+    @pytest.mark.parametrize("name", _ONE_BLOCK_CASES)
+    def test_matches_loop_and_dijkstra(self, spark, name):
+        from dataclasses import replace
+
+        from geopyspark_spark.operators import costdistance as cd
+
+        planes, tsz, cell_type, drop, points, rect, max_d = _one_block_case(name)
+        h, w = next(iter(planes.values())).shape
+        nc, nr = w // tsz, h // tsz
+        layout = gps.LayoutDefinition(
+            gps.Extent(0, 0, float(w), float(h)), gps.TileLayout(nc, nr, tsz, tsz))
+        md = replace(f1_metadata(cell_type), layout=layout,
+                     bounds=((0, 0), (nc - 1, nr - 1)), extent=layout.extent)
+        sentinel = -1.0 if cell_type.endswith("ud-1.0") else np.nan
+        tiles = []
+        for (inst, band), f in planes.items():
+            stored = np.where(np.isnan(f), sentinel, f)
+            for kc in range(nc):
+                for kr in range(nr):
+                    if (kc, kr) == drop:
+                        f[kr * tsz:(kr + 1) * tsz, kc * tsz:(kc + 1) * tsz] = np.nan
+                        continue
+                    t = stored[kr * tsz:(kr + 1) * tsz, kc * tsz:(kc + 1) * tsz]
+                    tiles.append((kc, kr, band, t) if inst is None
+                                 else (kc, kr, inst, band, t))
+        layer = gps.from_numpy(spark, tiles, md)
+        geoms = [gps.Point(c + 0.5, h - r - 0.5) for r, c in points]
+        seeds = list(points)
+        if rect is not None:
+            r0, c0, r1, c1 = rect
+            geoms.append(gps.Polygon([(c0 + 0.2, h - r0 - 0.2), (c1 + 0.8, h - r0 - 0.2),
+                                      (c1 + 0.8, h - r1 - 0.8), (c0 + 0.2, h - r1 - 0.8)]))
+            seeds += [(r, c) for r in range(r0, r1 + 1) for c in range(c0, c1 + 1)]
+        assert cd._block_factor(layout.tile_layout, 1 << 20) >= max(nc, nr)
+
+        def rows(out):
+            has_t = out.is_temporal
+            return {(r["key_col"], r["key_row"], r["instant"] if has_t else None,
+                     r["band"]): r["cells"] for r in out.df.collect()}
+
+        got = rows(cost_distance(layer, geoms, max_distance=max_d))
+        assert cd._loop_stats["one_block"]
+        loop = rows(cost_distance(layer, geoms, max_distance=max_d, block_cells=1))
+        assert not cd._loop_stats["one_block"]
+        want_keys = {(t[0], t[1], t[2] if len(t) == 5 else None, t[-2]) for t in tiles}
+        assert set(got) == set(loop) == want_keys
+        for k, cells in got.items():
+            assert None not in cells, f"SQL NULL cell in tile {k}"
+            np.testing.assert_allclose(
+                np.nan_to_num(np.asarray(cells), nan=-1.0),
+                np.nan_to_num(np.asarray(loop[k]), nan=-1.0), atol=1e-9,
+                err_msg=f"{name} {k}")
+        for (inst, band), f in planes.items():
+            exp = _ref_sources(f, seeds, max_d)
+            for (kc, kr, i, b), cells in got.items():
+                if (i, b) != (inst, band):
+                    continue
+                np.testing.assert_allclose(
+                    np.nan_to_num(np.asarray(cells).reshape(tsz, tsz), nan=-1.0),
+                    np.nan_to_num(exp[kr * tsz:(kr + 1) * tsz,
+                                      kc * tsz:(kc + 1) * tsz], nan=-1.0),
+                    atol=1e-9, err_msg=f"{name} {(kc, kr, i, b)}")
+
+    def test_build_is_lazy_and_path_is_recorded(self, spark):
+        """Building a one-block cost distance submits no Spark job and
+        its first action at most 3; an explicit max_iterations or a
+        one-tile block budget still runs the fixpoint loop."""
+        from geopyspark_spark.operators import costdistance as cd
+
+        rng = np.random.default_rng(3)
+        layer = _maze_layer(spark, rng.uniform(0.5, 3.0, size=(32, 32)))
+        src = gps.Point(1.5, 30.5)
+        sc = spark.sparkContext
+        st = sc.statusTracker()
+        try:
+            sc.setJobGroup("cd_one_block_build", "build")
+            out = cost_distance(layer, src)
+            assert st.getJobIdsForGroup("cd_one_block_build") == []
+            assert cd._loop_stats["one_block"]
+            sc.setJobGroup("cd_one_block_action", "action")
+            fast = {(r["key_col"], r["key_row"]): r["cells"] for r in out.df.collect()}
+            assert 1 <= len(st.getJobIdsForGroup("cd_one_block_action")) <= 3
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        for kwargs in ({"max_iterations": 50}, {"block_cells": 1}):
+            looped = cost_distance(layer, src, **kwargs)
+            assert not cd._loop_stats["one_block"], kwargs
+            assert cd._loop_stats["relaxed_per_round"], kwargs
+            assert cd._loop_stats["converged"], kwargs
+            for r in looped.df.collect():
+                np.testing.assert_allclose(
+                    r["cells"], fast[(r["key_col"], r["key_row"])], atol=1e-9)
