@@ -463,8 +463,8 @@ def components_from_edges(df: DataFrame, edges: DataFrame,
     # singletons back at the end. In a deduped corpus that shrinks each
     # round's join by orders of magnitude.
     connected = und.select(F.col("src").alias("doc_id")).distinct()
-    labels = connected.select("doc_id", F.col("doc_id").alias("component")).persist()
-    labels.count()
+    labels = connected.select(
+        "doc_id", F.col("doc_id").alias("component")).transform(materialize)
     for _ in range(max_iterations):
         # message-union min: each node takes min(self, neighbors) in ONE
         # join + ONE aggregate (the aggregateMessages shape)
@@ -512,6 +512,25 @@ def components_from_edges(df: DataFrame, edges: DataFrame,
     return labels.unionByName(singletons)
 
 
+def _verify(cand: DataFrame, grams_a: DataFrame, grams_b: DataFrame,
+            min_jaccard: float) -> DataFrame:
+    """Exact n-gram Jaccard of (doc_a, doc_b) candidates: ``grams_a`` /
+    ``grams_b`` (doc_id, grams: the distinct gram array) join the pairs
+    by doc id, and the intersection is one ``array_intersect`` per pair.
+    Keeps pairs that share a gram and reach ``min_jaccard``; returns
+    (doc_a, doc_b, inter_size, union_size)."""
+    ga = grams_a.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))
+    gb = grams_b.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb"))
+    inter = F.size(F.array_intersect("ga", "gb")).cast("long")
+    return (
+        cand.join(ga, "doc_a").join(gb, "doc_b")
+        .select("doc_a", "doc_b", inter.alias("inter_size"),
+                (F.size("ga") + F.size("gb") - inter).alias("union_size"))
+        .where((F.col("inter_size") > 0)
+               & (F.col("inter_size") >= min_jaccard * F.col("union_size")))
+    )
+
+
 def verified_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
                    n: int = 2, min_jaccard: float = 0.5,
                    text_col: str = "text", hash_ids: bool = True,
@@ -521,35 +540,20 @@ def verified_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
 
     The two-stage shape every production dedup uses: the probabilistic
     stage (banded LSH) bounds the candidate set; the exact stage computes
-    Jaccard ONLY for candidates (join pairs x grams, never all-pairs).
+    Jaccard ONLY for candidates, as ``size(array_intersect(ga, gb))``
+    over the two documents' distinct gram arrays (:func:`_verify`; never
+    all-pairs, never one row per gram). A pair must share at least one
+    gram (``inter_size > 0``), so ``min_jaccard=0.0`` returns the
+    candidates with any gram overlap, and a document with fewer than
+    ``n`` tokens never verifies.
     Returns (doc_a, doc_b, inter_size, union_size).
     """
     pairs = lsh_candidate_pairs(df, num_hashes, bands, text_col,
                                 hash_ids=hash_ids,
                                 max_bucket_size=max_bucket_size,
                                 skew_report=skew_report)
-    grams = df.select(
-        "doc_id", F.explode(shingles_col(text_col, n)).alias("gram")
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
-    ga = grams.select(F.col("doc_id").alias("doc_a"), "gram")
-    gb = grams.select(F.col("doc_id").alias("doc_b"), "gram")
-    inter = (
-        pairs.join(ga, "doc_a").join(gb, ["doc_b", "gram"])
-        .groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter_size"))
-    )
-    out = (
-        inter
-        .join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_grams").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_grams").alias("nb")), "doc_b")
-        .select(
-            "doc_a", "doc_b", "inter_size",
-            (F.col("na") + F.col("nb") - F.col("inter_size")).alias("union_size"),
-        )
-    )
-    return out.where(
-        F.col("inter_size") >= min_jaccard * F.col("union_size")
-    )
+    grams = df.select("doc_id", shingles_col(text_col, n).alias("grams"))
+    return _verify(pairs, grams, grams, min_jaccard)
 
 
 def dedup_documents(df: DataFrame, num_hashes: int = 16, bands: int = 4,
@@ -810,17 +814,21 @@ def dedup_against_corpus(batch: DataFrame, corpus: DataFrame | None = None,
     Candidates come from a batch x corpus band-bucket equi-join (never
     all-pairs), hot buckets on either side are dropped before the join
     (same skew rationale as :func:`lsh_candidate_pairs`), and the
-    exact Jaccard verify joins grams only for candidates.
+    exact Jaccard verify (:func:`_verify`) intersects each candidate's
+    two distinct gram arrays — the artifact's ``grams`` column on the
+    corpus side — with one ``array_intersect``. A match must share at
+    least one gram (``inter_size > 0``), so even ``min_jaccard=0.0``
+    never flags a document with no gram in common (or with fewer than
+    ``n`` tokens).
 
-    Returns one row per batch document:
+    Returns one row per distinct batch doc_id (a doc_id repeated in the
+    batch yields one verdict row):
     ``(doc_id, is_dup, match_doc_id)`` — ``match_doc_id`` is the
     smallest matching corpus doc_id (deterministic), NULL when clean.
     Within-batch duplicates are out of scope by design (run
     :func:`dedup_documents` on the batch first); a batch document also
     present verbatim in the corpus flags as a dup of it.
     """
-    from pyspark.sql.window import Window
-
     if (corpus is None) == (corpus_sigs is None):
         raise ValueError(
             "pass exactly one of corpus= (raw documents) or "
@@ -845,43 +853,20 @@ def dedup_against_corpus(batch: DataFrame, corpus: DataFrame | None = None,
         b_sig.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
         .join(c_sig.select(F.col("doc_id").alias("doc_b"), "band", "band_key"),
               ["band", "band_key"])
-        .select("doc_a", "doc_b").distinct()
+        .select("doc_a", "doc_b")
     )
-    bg = batch.select("doc_id", F.explode(shingles_col(text_col, n)).alias("gram"))
-    # gram-set sizes straight off the array (r16, guide §2.3 "aggregate
-    # before you shuffle", here: don't shuffle at all): shingles_col is
-    # already distinct, so size(array) == the old explode + groupBy
-    # count — one projection instead of a doc_id shuffle per side.
-    # (Empty-gram docs: kept here with size 0 vs absent before, but the
-    # verify join is inner on docs that emitted gram rows, so such docs
-    # never reach it either way — results identical.)
-    b_sizes = batch.select(
-        "doc_id", F.size(shingles_col(text_col, n)).alias("na"))
-    if corpus_sigs is not None:
-        cg = corpus_sigs.select("doc_id", F.explode("grams").alias("gram"))
-        c_sizes = corpus_sigs.select("doc_id", F.col("n_grams").alias("nb"))
-    else:
-        cg = corpus.select(
-            "doc_id", F.explode(shingles_col(text_col, n)).alias("gram"))
-        c_sizes = corpus.select(
-            "doc_id", F.size(shingles_col(text_col, n)).alias("nb"))
-    inter = (
-        cand.join(bg.select(F.col("doc_id").alias("doc_a"), "gram"), "doc_a")
-        .join(cg.select(F.col("doc_id").alias("doc_b"), "gram"),
-              ["doc_b", "gram"])
-        .groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter_size"))
-    )
-    dups = (
-        inter
-        .join(b_sizes.select(F.col("doc_id").alias("doc_a"), "na"), "doc_a")
-        .join(c_sizes.select(F.col("doc_id").alias("doc_b"), "nb"), "doc_b")
-        .where(F.col("inter_size")
-               >= min_jaccard * (F.col("na") + F.col("nb") - F.col("inter_size")))
-        .groupBy("doc_a").agg(F.min("doc_b").alias("match_doc_id"))
-    )
+    b_grams = batch.select("doc_id", shingles_col(text_col, n).alias("grams"))
+    c_grams = (corpus_sigs if corpus_sigs is not None else
+               corpus.select("doc_id", shingles_col(text_col, n).alias("grams")))
+    hits = _verify(cand, b_grams, c_grams, min_jaccard).select(
+        F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("match_doc_id"))
+    # the verdict is one aggregate: every batch doc enters with a NULL
+    # match and min() skips NULLs, so a clean doc keeps NULL and a dup
+    # gets its smallest match however many bands or corpus docs hit it
     return (
-        batch.select("doc_id")
-        .join(dups.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left_outer")
+        batch.select("doc_id", F.lit(None).alias("match_doc_id"))
+        .unionByName(hits)
+        .groupBy("doc_id").agg(F.min("match_doc_id").alias("match_doc_id"))
         .select("doc_id", F.col("match_doc_id").isNotNull().alias("is_dup"),
                 "match_doc_id")
     )

@@ -4,14 +4,15 @@ shape over Structured Streaming.
 Reference surface: none — the reference has no streaming engine; this
 is green-field capability for the LLM-data-pipeline side (SURVEY §2.12
 extension), built the way Spark documents for logic the streaming
-planner cannot express inline: ``dedup_against_corpus`` chains several
-aggregations (bucket-size window, intersection counts, per-doc min),
-which a single streaming query forbids — so each micro-batch runs the
-FULL batch operator via ``foreachBatch`` against the persisted corpus
-signature artifact and writes its verdicts to a ``batch_id``-
-partitioned parquet sink with dynamic partition overwrite. That is
-exactly the production shape: the corpus side is a pre-built artifact
-scan (O(batch) work per micro-batch — :func:`...functions.dedup.
+planner cannot express inline: ``dedup_against_corpus`` puts a
+bucket-size window count (a non-time window, which streaming
+DataFrames do not support) ahead of the band-bucket join, the
+gram-array verify join and the per-doc min aggregate — so each
+micro-batch runs the FULL batch operator via ``foreachBatch`` against
+the persisted corpus signature artifact and writes its verdicts to a
+``batch_id``-partitioned parquet sink with dynamic partition overwrite.
+That is exactly the production shape: the corpus side is a pre-built
+artifact scan (O(batch) work per micro-batch — :func:`...functions.dedup.
 corpus_signatures`), and the per-batch overwrite makes foreachBatch's
 at-least-once replays idempotent (ADVICE r14) — a replayed micro-batch
 rewrites its own partition instead of appending duplicates.
@@ -77,8 +78,8 @@ def stream_dedup_against_corpus(docs_stream: DataFrame,
         if k in ("num_hashes", "bands", "n")})
 
     def judge(batch_df: DataFrame, batch_id: int) -> None:
-        # one scan of the micro-batch: the operator's four reads of the
-        # batch (band signatures, grams, gram counts, doc ids) hit the pin
+        # one scan of the micro-batch: the operator's three reads of the
+        # batch (band signatures, gram arrays, doc ids) hit the pin
         with pinned_batch(batch_df) as batch_df:
             if batch_df.isEmpty():
                 return

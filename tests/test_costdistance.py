@@ -1089,3 +1089,15 @@ class TestOneBlock:
             for r in looped.df.collect():
                 np.testing.assert_allclose(
                     r["cells"], fast[(r["key_col"], r["key_row"])], atol=1e-9)
+
+    @pytest.mark.parametrize("kwargs", [{}, {"max_iterations": 50}])
+    def test_negative_friction_raises(self, spark, kwargs):
+        """A negative friction cell in a layer without NoData makes the
+        min-plus relaxation unbounded: the relax kernel raises a
+        ValueError naming the value instead of crashing the worker."""
+        fric = np.ones((16, 16))
+        fric[5, 9] = -1.0
+        layer = _maze_layer(spark, fric)
+        with pytest.raises(Exception, match=r"negative friction -1\.0"):
+            out = cost_distance(layer, gps.Point(1.5, 14.5), **kwargs)
+            out.df.collect()

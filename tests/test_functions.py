@@ -811,6 +811,73 @@ class TestDedupAgainstCorpus:
             fdedup.dedup_against_corpus(batch, corpus, corpus_sigs=sigs)
 
 
+class TestGramArrayVerify:
+    """The exact verify intersects per-document gram arrays. The MinHash
+    bands are built from bigrams, so a trigram verify (n=3) can get LSH
+    candidates that share no gram, or that have no gram at all."""
+
+    # identical bigram sets {x y, y x} -> equal signatures in every band;
+    # trigram sets {x y x} / {y x y} are disjoint
+    NO_SHARED = ("x y x", "y x y")
+    # two tokens: equal signatures, but no trigram on either side
+    TOO_SHORT = "x y"
+
+    def test_verified_pairs_needs_a_shared_gram(self, spark):
+        df = spark.createDataFrame(
+            [(1, self.NO_SHARED[0]), (2, self.NO_SHARED[1]),
+             (3, self.TOO_SHORT), (4, self.TOO_SHORT),
+             (5, "p q r s"), (6, "p q r s")],
+            "doc_id long, text string")
+        cand = {(r["doc_a"], r["doc_b"])
+                for r in fdedup.lsh_candidate_pairs(df).collect()}
+        assert {(1, 2), (3, 4), (5, 6)} <= cand
+        got = [(r["doc_a"], r["doc_b"], r["inter_size"], r["union_size"])
+               for r in fdedup.verified_pairs(
+                   df, n=3, min_jaccard=0.0).collect()]
+        # (5, 6) shares all four bands and verifies exactly once
+        assert got == [(5, 6, 2, 2)]
+
+    def test_against_corpus_needs_a_shared_gram(self, spark, tmp_path):
+        corpus = spark.createDataFrame(
+            [(10, self.NO_SHARED[0]), (11, self.TOO_SHORT),
+             (12, "p q r s")],
+            "doc_id long, text string")
+        batch = spark.createDataFrame(
+            [(100, self.NO_SHARED[1]), (101, self.TOO_SHORT),
+             (102, "p q r s"), (102, "p q r s")],   # repeated doc_id
+            "doc_id long, text string")
+        path = str(tmp_path / "sigs")
+        fdedup.corpus_signatures(corpus, n=3).write.parquet(path)
+        for kw in ({"corpus": corpus},
+                   {"corpus_sigs": spark.read.parquet(path)}):
+            got = sorted(tuple(r) for r in fdedup.dedup_against_corpus(
+                batch, n=3, min_jaccard=0.0, **kw).collect())
+            # 102 shares all four bands with 12 (and is in the batch
+            # twice): one verdict row
+            assert got == [(100, False, None), (101, False, None),
+                           (102, True, 12)], kw
+
+    def test_against_artifact_job_count(self, spark, tmp_path):
+        """Collecting a verdict against a parquet artifact ran 16 jobs
+        on this fixture (15 in the benchmark's step) while the verify
+        exploded grams and joined size tables; the gram-array verify
+        runs fewer."""
+        corpus, batch = TestDedupAgainstCorpus._fixture(spark)
+        path = str(tmp_path / "sigs")
+        fdedup.corpus_signatures(corpus).write.parquet(path)
+        sigs = spark.read.parquet(path)
+        sc = spark.sparkContext
+        try:
+            sc.setJobGroup("dedup_against_artifact", "collect")
+            fdedup.dedup_against_corpus(batch, corpus_sigs=sigs).collect()
+            jobs = sc.statusTracker().getJobIdsForGroup(
+                "dedup_against_artifact")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert 1 <= len(jobs) < 15
+
+
 class TestEmbDedup:
     def test_semantic_dedup_keep_flags(self, spark):
         rows = [

@@ -10,7 +10,10 @@ Two axes, because the workload has two kinds of scale:
 - **cells axis** — the raster fixture is sf-invariant by design (a
   fixed 32x32 grid), so raster iterative operators scale with GRID
   SIZE instead: cost_distance runs on random-friction grids from 64^2
-  to 1024^2 cells.
+  to 1024^2 cells. Cells-axis times are cold-cache: every timed call
+  starts after ``spark.catalog.clearCache()``, so it cannot be served
+  from state an earlier identical call left cached (and it pays for
+  re-reading its input grid).
 
 Usage::
 
@@ -65,9 +68,11 @@ def _session():
     return spark
 
 
-def time_query(fn, repeats: int) -> float:
+def time_query(fn, repeats: int, before=None) -> float:
     ts = []
     for _ in range(repeats):
+        if before is not None:
+            before()  # untimed
         t0 = time.time()
         fn()
         ts.append(time.time() - t0)
@@ -136,7 +141,7 @@ def run_cells_axis(spark, repeats: int, sides) -> dict:
 
     def record(op, n, fn):
         fn()  # warm
-        sec = time_query(fn, repeats)
+        sec = time_query(fn, repeats, before=spark.catalog.clearCache)
         out.setdefault(op, {})[str(n * n)] = round(sec, 3)
         print(f"  {op} @ {n}x{n} ({n * n} cells): {sec:.3f}s")
 
