@@ -219,6 +219,24 @@ def _minhash_wide(df: DataFrame, num_hashes: int, text_col: str,
     return ids.groupBy("doc_id").agg(*mins)
 
 
+def _band_keys(num_hashes: int, bands: int):
+    """array<struct<band int, band_key string>> over a ``_minhash_wide``
+    row: each band's ``num_hashes // bands`` minhash values joined by
+    '-'. The one definition of the band-key format: batch keys and the
+    artifact's keys join only because both are built here."""
+    rows_per_band = num_hashes // bands
+    return F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                "-", *[F.col(f"h{b * rows_per_band + j}").cast("string")
+                       for j in range(rows_per_band)]
+            ).alias("band_key"),
+        )
+        for b in range(bands)
+    ])
+
+
 def lsh_candidate_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
                         text_col: str = "text", hash_ids: bool = True,
                         max_bucket_size: int | None = 10_000,
@@ -241,25 +259,14 @@ def lsh_candidate_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
     call (the module-level :func:`skew_guard_report` convenience also
     still sees the most recent plan).
     """
-    rows_per_band = num_hashes // bands
     # band keys straight off the wide per-doc aggregate: one shuffle total
     # (the groupBy(doc_id) in _minhash_wide); no long-form regroup.
     # The self-join below consumes this subtree on both sides; AQE stage
     # reuse dedupes the identical scans at runtime (verified: an explicit
     # localCheckpoint here only added overhead)
     wide = _minhash_wide(df, num_hashes, text_col, hash_ids=hash_ids)
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "-", *[F.col(f"h{b * rows_per_band + j}").cast("string")
-                       for j in range(rows_per_band)]
-            ).alias("band_key"),
-        )
-        for b in range(bands)
-    ]
     band_sig = wide.select(
-        "doc_id", F.explode(F.array(*band_rows)).alias("bk")
+        "doc_id", F.explode(_band_keys(num_hashes, bands)).alias("bk")
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
     if max_bucket_size is not None:
         # bucket-size filter as a window count over the SAME partition
@@ -615,20 +622,9 @@ def _band_signatures(df: DataFrame, num_hashes: int, bands: int,
     """(doc_id, band, band_key) — banded minhash signatures off the wide
     per-doc aggregate (one shuffle; stateless md5 shingle ids, so a
     signature depends only on the document's own text)."""
-    rows_per_band = num_hashes // bands
     wide = _minhash_wide(df, num_hashes, text_col, hash_ids=True)
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "-", *[F.col(f"h{b * rows_per_band + j}").cast("string")
-                       for j in range(rows_per_band)]
-            ).alias("band_key"),
-        )
-        for b in range(bands)
-    ]
     return wide.select(
-        "doc_id", F.explode(F.array(*band_rows)).alias("bk")
+        "doc_id", F.explode(_band_keys(num_hashes, bands)).alias("bk")
     ).select("doc_id", F.col("bk.band").alias("band"),
              F.col("bk.band_key").alias("band_key"))
 
@@ -660,19 +656,8 @@ def corpus_signatures(corpus: DataFrame, num_hashes: int = 16,
     ``_minhash_wide`` plus a doc_id-keyed join against the (narrow,
     shuffle-free) shingle projection — then never again per batch.
     """
-    rows_per_band = num_hashes // bands
     wide = _minhash_wide(corpus, num_hashes, text_col, hash_ids=True)
-    band_arr = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "-", *[F.col(f"h{b * rows_per_band + j}").cast("string")
-                       for j in range(rows_per_band)]
-            ).alias("band_key"),
-        )
-        for b in range(bands)
-    ])
-    sigs = wide.select("doc_id", band_arr.alias("band_keys"))
+    sigs = wide.select("doc_id", _band_keys(num_hashes, bands).alias("band_keys"))
     grams = corpus.select("doc_id", shingles_col(text_col, n).alias("grams"))
     return (
         sigs.join(grams, "doc_id")

@@ -666,6 +666,9 @@ class Pyramid:
     def __init__(self, levels: dict[int, TiledRasterLayer]):
         self.levels = dict(sorted(levels.items(), reverse=True))
         self.max_zoom = max(levels)
+        # the frames cache() pins, in order: every level's own frame,
+        # plus the chunk frames when tiling.pyramid built the levels
+        self._pins = [layer.df for layer in self.levels.values()]
 
     def __getitem__(self, zoom: int) -> TiledRasterLayer:
         return self.levels[zoom]
@@ -687,13 +690,18 @@ class Pyramid:
         return write_pyramid(uri, layer_name, self, index_strategy)
 
     def cache(self) -> "Pyramid":
-        for layer in self.levels.values():
-            layer.persist()
+        """Persist every level. A pyramid from
+        :meth:`TiledRasterLayer.pyramid` first persists its base layer
+        and each chunk frame its levels filter, so every level is cut
+        from one kernel run."""
+        for df in self._pins:
+            df.persist()
         return self
 
     def unpersist(self) -> "Pyramid":
-        for layer in self.levels.values():
-            layer.unpersist()
+        """Release every frame :meth:`cache` persisted."""
+        for df in self._pins:
+            df.unpersist()
         return self
 
 

@@ -843,6 +843,9 @@ def _cost_distance_core(
     )
     _loop_stats["round_secs"] = []
     converged = False
+    # the frame the next round releases: `state` is a projection of it,
+    # and unpersisting a projection matches no cache entry
+    pinned = state
     for rnd in range(max_iterations):
         _t0 = time.time()
         round_cache = None
@@ -935,7 +938,8 @@ def _cost_distance_core(
         _loop_stats["round_secs"].append(round(time.time() - _t0, 3))
         if round_cache is not None:
             round_cache.unpersist()
-        state.unpersist()
+        pinned.unpersist()
+        pinned = new_state
         # roll state forward WITHOUT the diagnostics column: keeping
         # `touched` in the persisted round output measurably ~3x'd the
         # next round's job (wider cached rows + a fatter plan); the
@@ -946,6 +950,10 @@ def _cost_distance_core(
             break
 
     frag_f.unpersist()
+    if pinned.is_cached:
+        # the result must not hold a cache entry for the session
+        state = materialize(state)
+        pinned.unpersist()
     _loop_stats["converged"] = converged
     if not converged and warn_unconverged:
         import warnings

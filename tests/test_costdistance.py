@@ -1101,3 +1101,22 @@ class TestOneBlock:
         with pytest.raises(Exception, match=r"negative friction -1\.0"):
             out = cost_distance(layer, gps.Point(1.5, 14.5), **kwargs)
             out.df.collect()
+
+
+def test_looped_call_leaves_no_cache_entry(spark):
+    """Every persisted round of the fixpoint loop is released, and the
+    result reads a lineage pin rather than a session-long cache entry:
+    once a looped call's result is collected, the CacheManager is empty."""
+    from geopyspark_spark.operators import costdistance as cd
+
+    spark.catalog.clearCache()
+    layout = gps.LayoutDefinition(gps.Extent(0, 0, 16, 16), gps.TileLayout(4, 4, 4, 4))
+    md = gps.LayerMetadata(
+        crs="epsg:4326", cell_type="float64", layout=layout,
+        bounds=((0, 0), (3, 3)), extent=layout.extent, num_bands=1)
+    tiles = [(kc, kr, 0, np.ones((4, 4))) for kc in range(4) for kr in range(4)]
+    layer = gps.from_numpy(spark, tiles, md)
+    a = _stitched(cost_distance(layer, gps.Point(0.5, 15.5), block_cells=1))
+    assert len(cd._loop_stats["relaxed_per_round"]) > 1
+    assert abs(a[15, 15] - 15 * math.sqrt(2)) < 1e-9
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -465,3 +465,237 @@ class TestTileToLayoutReferenceSignature:
             f1_layer.metadata.layout,
             partition_strategy=gps.HashPartitionStrategy(2))
         assert out.df.rdd.getNumPartitions() == 2
+
+
+_INTERPOLATING = ["Bilinear", "CubicConvolution", "CubicSpline", "Lanczos"]
+
+
+def _interp_grid(g: np.ndarray, present: np.ndarray, n_lr: int, n_lc: int,
+                 tr: int, tc: int, method: str):
+    """The parent level of an interpolating pyramid: ``resample_tile`` on
+    each parent's own (2tr, 2tc) window of children, for every parent
+    with an existing child tile. Returns (grid, parent tile present)."""
+    from geopyspark_spark.operators.resample import resample_tile
+
+    pad = np.full((2 * n_lr * tr, 2 * n_lc * tc), np.nan)
+    pad[:g.shape[0], :g.shape[1]] = g
+    ppad = np.zeros((2 * n_lr, 2 * n_lc), dtype=bool)
+    ppad[:present.shape[0], :present.shape[1]] = present
+    up = ppad.reshape(n_lr, 2, n_lc, 2).any(axis=(1, 3))
+    out = np.full((n_lr * tr, n_lc * tc), np.nan)
+    for pr, pc in zip(*np.nonzero(up)):
+        out[pr * tr:(pr + 1) * tr, pc * tc:(pc + 1) * tc] = resample_tile(
+            pad[2 * pr * tr:2 * (pr + 1) * tr, 2 * pc * tc:2 * (pc + 1) * tc],
+            tr, tc, method, None)
+    return out, up
+
+
+class TestPyramidChunks:
+    """One 4-level pyramid built in chunks of 1 level, of 2 levels and of
+    all levels (``_PYR_BLOCK_CELLS`` patched) is exact at every level
+    for every method: a 9x5 layout of 4x4 tiles, ud-1 NoData, a missing
+    tile (3, 1), an all-NoData tile (5, 2), 2 bands, spatial and
+    temporal, and a 2x2 block whose Average is the fill value (a
+    computed -1.0 is NoData at the next level)."""
+
+    TC = TR = 4
+    LC, LR = 9, 5
+    FILL = -1.0
+    #: block cells -> levels per chunk: (4*4)*(2^d)^2 cells hold d levels
+    CHUNKS = {1: [1, 1, 1, 1], 16 * 16: [2, 2], 1 << 22: [4]}
+
+    def _grids(self, temporal: bool) -> dict:
+        from datetime import datetime
+
+        rng = np.random.default_rng(5)
+        instants = ([datetime(2024, 1, 1), datetime(2024, 2, 1)]
+                    if temporal else [None])
+        grids = {}
+        for t in instants:
+            for b in range(2):
+                g = rng.integers(0, 5, (self.LR * self.TR, self.LC * self.TC))
+                g = g.astype(float) + 0.5 * b
+                g[rng.random(g.shape) < 0.2] = np.nan
+                g[4:6, 8:10] = [[-1.5, -0.5], [-2.0, 0.0]]     # Average = fill
+                g[4:8, 12:16] = np.nan                         # tile (3, 1)
+                g[8:12, 20:24] = np.nan                        # tile (5, 2)
+                grids[(t, b)] = g
+        return grids
+
+    def _layer(self, spark, grids: dict):
+        layout = gps.LayoutDefinition(
+            gps.Extent(0, 0, self.LC * self.TC, self.LR * self.TR),
+            gps.TileLayout(self.LC, self.LR, self.TC, self.TR))
+        md = gps.LayerMetadata(
+            crs="epsg:4326", cell_type="float64ud-1", layout=layout,
+            bounds=((0, 0), (self.LC - 1, self.LR - 1)), extent=layout.extent,
+            num_bands=2, zoom=4,
+        )
+        tiles = []
+        for (t, b), g in grids.items():
+            for kc in range(self.LC):
+                for kr in range(self.LR):
+                    if (kc, kr) == (3, 1):
+                        continue                               # missing tile
+                    a = g[kr * self.TR:(kr + 1) * self.TR, kc * self.TC:(kc + 1) * self.TC]
+                    a = np.where(np.isnan(a), self.FILL, a)
+                    tiles.append((kc, kr, b, a) if t is None else (kc, kr, t, b, a))
+        return gps.from_numpy(spark, tiles, md)
+
+    def _want(self, grids: dict, method: str) -> dict:
+        """{zoom: {(instant, band, key_col, key_row): (TR, TC) array}},
+        NaN = NoData, levels chained in numpy with the NoData round trip."""
+        present = np.ones((self.LR, self.LC), dtype=bool)
+        present[1, 3] = False
+        state = {k: (g, present) for k, g in grids.items()}
+        n_lc, n_lr = self.LC, self.LR
+        want = {}
+        for z in (3, 2, 1, 0):
+            n_lc, n_lr = max(1, (n_lc + 1) // 2), max(1, (n_lr + 1) // 2)
+            level = {}
+            for (t, b), (g, p) in state.items():
+                if method in _INTERPOLATING:
+                    g, p = _interp_grid(g, p, n_lr, n_lc, self.TR, self.TC, method)
+                else:
+                    g = _reduce_grid(g, n_lr, n_lc, self.TR, self.TC, method)
+                for kc in range(n_lc):
+                    for kr in range(n_lr):
+                        a = g[kr * self.TR:(kr + 1) * self.TR, kc * self.TC:(kc + 1) * self.TC]
+                        row = p[kr, kc] if method in _INTERPOLATING else not np.isnan(a).all()
+                        if row:
+                            level[(t, b, kc, kr)] = np.where(a == self.FILL, np.nan, a)
+                # fill -> NaN on the way into the next level
+                state[(t, b)] = (np.where(g == self.FILL, np.nan, g), p)
+            want[z] = level
+        return want
+
+    @staticmethod
+    def _got(pyrs: dict) -> dict:
+        """Every level of every pyramid in one action:
+        {name: {zoom: {key: cells}}}, NaN = NoData."""
+        from pyspark.sql import functions as F
+
+        df = None
+        for name, pyr in pyrs.items():
+            d = pyr.to_dataframe().where("zoom < 4").withColumn("name", F.lit(name))
+            df = d if df is None else df.unionByName(d)
+        got = {name: {} for name in pyrs}
+        for row in df.collect():
+            d = row.asDict()
+            a = np.asarray(d["cells"], dtype=float).reshape(4, 4)
+            key = (d.get("instant"), d["band"], d["key_col"], d["key_row"])
+            got[d["name"]].setdefault(d["zoom"], {})[key] = np.where(a == -1.0, np.nan, a)
+        return got
+
+    @pytest.mark.parametrize("temporal", [False, True], ids=["spatial", "temporal"])
+    @pytest.mark.parametrize("block_cells", sorted(CHUNKS))
+    def test_levels_exact_across_chunkings(self, spark, monkeypatch, block_cells, temporal):
+        import geopyspark_spark.operators.tiling as tiling
+
+        monkeypatch.setattr(tiling, "_PYR_BLOCK_CELLS", block_cells)
+        grids = self._grids(temporal)
+        layer = self._layer(spark, grids)
+        pyrs = {m: layer.pyramid(resample_method=m) for m in _AGGREGATING + _INTERPOLATING}
+        for pyr in pyrs.values():
+            assert set(pyr.levels) == {4, 3, 2, 1, 0}
+            # cache() pins one frame per chunk besides the levels
+            assert len(pyr._pins) - len(pyr.levels) == len(self.CHUNKS[block_cells])
+            for z, (lc, lr) in zip((3, 2, 1, 0), ((5, 3), (3, 2), (2, 1), (1, 1))):
+                tl = pyr[z].layout.tile_layout
+                assert (tl.layout_cols, tl.layout_rows) == (lc, lr)
+        all_got = self._got(pyrs)
+        for method, got in all_got.items():
+            for z, want in self._want(grids, method).items():
+                assert set(got.get(z, {})) == set(want), (method, z)
+                for k, a in want.items():
+                    if method in _INTERPOLATING:
+                        np.testing.assert_array_equal(got[z][k], a, err_msg=f"{method} z={z} {k}")
+                    else:
+                        np.testing.assert_allclose(got[z][k], a, rtol=1e-12, atol=0,
+                                                   err_msg=f"{method} z={z} {k}")
+
+    def test_fill_valued_average_is_nodata_above(self, spark):
+        """The 2x2 block {-1.5, -0.5, -2.0, 0.0} averages to the fill
+        value: that zoom-3 cell is NoData, so its zoom-2 parent averages
+        only its other children."""
+        got = self._got({"avg": self._layer(spark, self._grids(False)).pyramid()})["avg"]
+        for b in range(2):
+            z3 = got[3][(None, b, 1, 0)]
+            assert np.isnan(z3[2, 0])
+            kids = z3[2:4, 0:2]
+            assert not np.isnan(kids).all()
+            np.testing.assert_allclose(got[2][(None, b, 0, 0)][1, 2],
+                                       np.nanmean(kids), rtol=1e-12, atol=0)
+
+
+class TestPyramidLifecycle:
+    @pytest.fixture()
+    def layer(self, spark):
+        layout = gps.LayoutDefinition(gps.Extent(0, 0, 36, 20), gps.TileLayout(9, 5, 4, 4))
+        md = gps.LayerMetadata(
+            crs="epsg:4326", cell_type="float64", layout=layout,
+            bounds=((0, 0), (8, 4)), extent=layout.extent, num_bands=1)
+        tiles = [(kc, kr, 0, np.full((4, 4), float(kc + kr)))
+                 for kc in range(9) for kr in range(5)]
+        return gps.from_numpy(spark, tiles, md)
+
+    def test_build_submits_no_job(self, spark, layer):
+        sc = spark.sparkContext
+        sc.setJobGroup("pyramid-build", "pyramid() must stay lazy")
+        try:
+            layer.pyramid()
+            layer.pyramid(resample_method="Bilinear")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup("pyramid-build") == []
+
+    def test_cache_runs_each_chunk_kernel_once(self, spark, monkeypatch, layer):
+        """After cache(), reading every level top-down runs each chunk's
+        grouped kernel once: every kernel node under the levels' executed
+        plans (cached plans included) received exactly its chunk frame's
+        rows. unpersist() leaves the session's CacheManager empty."""
+        import geopyspark_spark.operators.tiling as tiling
+
+        monkeypatch.setattr(tiling, "_PYR_BLOCK_CELLS", 16 * 16)
+        spark.catalog.clearCache()
+        pyr = layer.pyramid().cache()
+        for z in sorted(pyr.levels, reverse=True):
+            pyr[z].df.collect()
+        sc = spark.sparkContext
+
+        def kernel_rows(node, seen, out):
+            name = node.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                return kernel_rows(node.executedPlan(), seen, out)
+            if name.endswith("QueryStageExec"):
+                return kernel_rows(node.plan(), seen, out)
+            if name == "InMemoryTableScanExec":
+                return kernel_rows(node.relation().cacheBuilder().cachedPlan(), seen, out)
+            if name == "FlatMapGroupsInPandasExec":
+                h = sc._jvm.System.identityHashCode(node)
+                if h not in seen:
+                    seen.add(h)
+                    out.append(node.metrics().apply("pythonNumRowsReceived").value())
+            children = node.children()
+            for i in range(children.size()):
+                kernel_rows(children.apply(i), seen, out)
+
+        seen, rows = set(), []
+        for level in pyr.levels.values():
+            kernel_rows(level.df._jdf.queryExecution().executedPlan(), seen, rows)
+        # the base layer, the chunk frames, then the other levels
+        frames = pyr._pins[1:len(pyr._pins) - len(pyr.levels) + 1]
+        assert len(frames) == 2                        # 4 levels, 2 per chunk
+        assert all(lv.df.is_cached for lv in pyr.levels.values())
+        assert sorted(rows) == sorted(f.count() for f in frames)
+        pyr.unpersist()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def test_hand_built_pyramid_caches_its_levels(self, spark, layer):
+        spark.catalog.clearCache()
+        pyr = gps.Pyramid({1: layer, 0: layer.pyramid()[3]})
+        pyr.cache()
+        assert all(lv.df.is_cached for lv in pyr.levels.values())
+        pyr.unpersist()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

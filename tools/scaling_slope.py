@@ -14,6 +14,9 @@ Two axes, because the workload has two kinds of scale:
   starts after ``spark.catalog.clearCache()``, so it cannot be served
   from state an earlier identical call left cached (and it pays for
   re-reading its input grid).
+- **pyramid axis** — an Average pyramid over 64x64-cell tiles from
+  128^2 to 1024^2 cells, cold-cache like the cells axis; each timed
+  call builds the pyramid, caches it and reads every level top-down.
 
 Usage::
 
@@ -53,6 +56,7 @@ SF_QUERIES = [
 ]
 
 GRID_SIDES = [64, 128, 256, 512, 1024]   # cells 4k .. 1M
+PYRAMID_SIDES = [128, 256, 512, 1024]    # 2x2 .. 16x16 tiles of 64^2
 
 
 def _session():
@@ -173,6 +177,34 @@ def run_cells_axis(spark, repeats: int, sides) -> dict:
     return out
 
 
+def run_pyramid_axis(spark, repeats: int, sides) -> dict:
+    """Average pyramid on the cells axis: 64x64-cell tiles, seeded
+    integer grid; each timed call builds the pyramid, caches it, reads
+    every level's cells top-down and releases the cache."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    out: dict = {}
+    for n in sides:
+        grid = np.random.default_rng(42).integers(0, 1000, (n, n)).astype(float)
+        layer = _grid_layer(spark, grid, tsz=64)
+
+        def build_and_read():
+            pyr = layer.pyramid("Average").cache()
+            try:
+                for z in sorted(pyr.levels, reverse=True):
+                    pyr[z].df.select(F.sum(F.size("cells"))).collect()
+            finally:
+                pyr.unpersist()
+
+        build_and_read()  # warm
+        sec = time_query(build_and_read, repeats, before=spark.catalog.clearCache)
+        out[str(n * n)] = round(sec, 3)
+        print(f"  pyramid @ {n}x{n} ({n * n} cells): {sec:.3f}s")
+        layer.df.unpersist()
+    return out
+
+
 def run_boundary_rounds_axis(spark, sides) -> dict:
     """Round-count axis for the distributed boundary solver (r15,
     VERDICT r14 #1): a serpentine long-path maze forces many
@@ -231,7 +263,8 @@ def run_boundary_rounds_axis(spark, sides) -> dict:
     return out
 
 
-def render_md(sf_axis: dict, cells_axis: dict, repeats: int) -> str:
+def render_md(sf_axis: dict, cells_axis: dict, pyramid_axis: dict,
+              repeats: int) -> str:
     lines = [
         "# SCALING — empirical sec-vs-scale record (round 14)",
         "",
@@ -291,7 +324,13 @@ def render_md(sf_axis: dict, cells_axis: dict, repeats: int) -> str:
         "Named steps and their explanations live in the Reading section",
         "appended below by the operator of record.",
         "",
+        "## pyramid axis (Average, 64x64-cell tiles, build + cache + read every level)",
+        "",
+        "| cells | pyramid |",
+        "|---|---|",
     ]
+    lines += [f"| {c} | {v} |" for c, v in pyramid_axis.items()]
+    lines.append("")
     return "\n".join(lines)
 
 
@@ -325,10 +364,13 @@ def main():
     sf_axis = run_sf_axis(spark, repeats)
     print("== cells axis ==")
     cells_axis = run_cells_axis(spark, repeats, sides)
+    print("== pyramid axis ==")
+    pyramid_axis = run_pyramid_axis(
+        spark, repeats, PYRAMID_SIDES[:-1] if args.quick else PYRAMID_SIDES)
     print("== boundary_rounds axis ==")
     boundary_axis = run_boundary_rounds_axis(
         spark, [64] if args.quick else [64, 96])
-    md = render_md(sf_axis, cells_axis, repeats)
+    md = render_md(sf_axis, cells_axis, pyramid_axis, repeats)
     with open(args.out, "w") as f:
         f.write(md)
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -337,6 +379,7 @@ def main():
     with open(json_path, "w") as f:
         json.dump({"repeats": repeats, "sf_axis": sf_axis,
                    "cells_axis": cells_axis,
+                   "pyramid_axis": pyramid_axis,
                    "boundary_rounds_axis": boundary_axis,
                    "git_head": git_head()}, f, indent=1)
     print(f"wrote {args.out}")
